@@ -3,13 +3,22 @@
 PY ?= python
 SF ?= /root/testdata/sf0.1
 
-.PHONY: test bench scaling demo clean
+.PHONY: test bench kgbench scaling demo clean
 
 test:
 	$(PY) -m pytest tests/ -x -q
 
 bench:
 	SPARK_GRAFT_SF_DIR=$(SF) $(PY) bench.py
+
+# one benchmark workload (crawl_kg or rdf_facts); TRACE=1 adds the per-layer metrics
+WL ?= rdf_facts
+SEED ?= 1
+SECONDS ?= 14
+TRACE ?= 0
+
+kgbench:
+	$(PY) kgbench/run.py --workload $(WL) --seed $(SEED) --seconds $(SECONDS) --trace $(TRACE)
 
 scaling:
 	$(PY) bench_scaling.py

@@ -38,7 +38,8 @@ def class_instances(triples: DataFrame, class_uris: list[str]) -> DataFrame:
 def rdf_list_members(triples: DataFrame, heads: DataFrame, max_len: int = 64) -> DataFrame:
     """Expand rdf:first/rdf:rest list spines: heads(ctx, node) ->
     (ctx, member). Bounded driver loop — RDF lists in ontologies are short
-    (union-of domains/ranges), so each round is a broadcast join."""
+    (union-of domains/ranges), so each round is a broadcast join. Raises
+    ``ValueError`` when a spine is longer than ``max_len`` or cyclic."""
     first = triples.filter(F.col("p") == RDF_FIRST).select(
         F.col("s").alias("node"), F.col("o").alias("member")
     )
@@ -56,9 +57,10 @@ def rdf_list_members(triples: DataFrame, heads: DataFrame, max_len: int = 64) ->
             .localCheckpoint(eager=True)
         )
         if frontier.count() == 0:
-            break
-    return out.distinct() if out is not None else heads.select("ctx").limit(0).withColumn(
-        "member", F.lit(None).cast("string")
+            return out.distinct()
+    raise ValueError(
+        f"rdf_list_members: an rdf:rest spine is longer than max_len={max_len} "
+        "or cyclic; raise max_len or fix the list"
     )
 
 
@@ -82,7 +84,9 @@ def _domain_pairs(triples: DataFrame) -> DataFrame:
 
 
 def subproperty_closure(triples: DataFrame, max_rounds: int = 32) -> DataFrame:
-    """subPropertyOf+ — transitive (non-reflexive) closure, (sub, sup)."""
+    """subPropertyOf+ — transitive (non-reflexive) closure, (sub, sup).
+    Raises ``ValueError`` when the closure needs more than ``max_rounds``
+    rounds (a chain of more than ``max_rounds`` links)."""
     edges = triples.filter(F.col("p") == RDFS_SUBPROP).select(
         F.col("s").alias("sub"), F.col("o").alias("sup")
     ).distinct().localCheckpoint(eager=True)
@@ -98,10 +102,13 @@ def subproperty_closure(triples: DataFrame, max_rounds: int = 32) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         if nxt.count() == 0:
-            break
+            return closure
         closure = closure.unionByName(nxt).localCheckpoint(eager=True)
         frontier = nxt
-    return closure
+    raise ValueError(
+        f"subproperty_closure did not converge within {max_rounds} rounds: "
+        "the rdfs:subPropertyOf chain is too long; raise max_rounds"
+    )
 
 
 def domain_properties(triples: DataFrame, class_uri: str | None = None) -> DataFrame:

@@ -18,6 +18,13 @@ over the triples DataFrame:
 Instance trees are small and independent — the per-group Python DFS is the
 reference algorithm verbatim over a few dozen rows, Arrow-batched; all the
 heavy lifting (subtree assignment, grouping, numbering) is DataFrame ops.
+
+Two intermediates are materialized once with ``localCheckpoint()``: the
+parsed input (projected to ``s, p, o, o_datatype``) and the DFS output.
+Both come out of Python stages (a parser's ``mapInPandas``, the
+``applyInPandas`` DFS). Without the checkpoints every later action — each
+subtree round, the range sampler of the numbering, a caller's reindex
+joins and writes — re-runs those stages from the source.
 """
 
 from __future__ import annotations
@@ -73,7 +80,11 @@ def assign_subtrees(
     """roots(instance, class_uri) -> (root, node): every resource node
     reachable from an entry instance via object links. Bounded-depth
     iterative broadcast join (instance trees are shallow — the reference
-    recursion depth is bounded by the ontology's property nesting)."""
+    recursion depth is bounded by the ontology's property nesting).
+
+    Raises ``ValueError`` when a node lies deeper than ``max_depth`` links
+    below its root: returning the truncated subtree would silently drop
+    that part of the instance tree from the observations."""
     edges = (
         triples.filter(F.col("o_datatype").isNull() & ~F.col("p").isin(RDF_TYPE, RDFS_LABEL))
         .select(F.col("s").alias("node"), F.col("o").alias("child"))
@@ -81,7 +92,9 @@ def assign_subtrees(
     )
     frontier = roots.select(F.col("instance").alias("root"), F.col("instance").alias("node"))
     out = frontier
-    for _ in range(max_depth):
+    # round k finds the nodes k links below their root; the round past
+    # max_depth must come back empty
+    for _ in range(max_depth + 1):
         frontier = (
             frontier.join(edges, "node")
             .select("root", F.col("child").alias("node"))
@@ -90,9 +103,12 @@ def assign_subtrees(
             .localCheckpoint(eager=True)
         )
         if frontier.count() == 0:
-            break
+            return out
         out = out.unionByName(frontier)
-    return out
+    raise ValueError(
+        f"assign_subtrees: an instance tree is deeper than max_depth={max_depth} "
+        "links; raise max_depth or check the instance graph"
+    )
 
 
 def extract_observations(
@@ -104,9 +120,17 @@ def extract_observations(
 ) -> DataFrame:
     """The full data-pipeline: one OBSERVATION row per path end, with
     inherited context and chained basecodes. Output numbered per class
-    (E1) and gated on mandatory context (B7)."""
+    (E1) and gated on mandatory context (B7).
+
+    Eager: the subtree fixpoint runs driver actions, and two intermediates
+    are materialized with ``localCheckpoint()`` — the input triples
+    (projected to ``s, p, o, o_datatype``) and the DFS output. Actions on
+    the returned frame therefore re-run neither the input's parse nor the
+    Python DFS; only the numbering and the final join stay lazy."""
     ctx_cfg = context_config if context_config is not None else DEFAULT_CONTEXT
     spark = triples.sparkSession
+    # read by the class lookup, every subtree round and the tagging join
+    triples = triples.select("s", "p", "o", "o_datatype").localCheckpoint()
 
     roots = class_instances(triples, entry_classes)
     subtree = assign_subtrees(triples, roots, max_depth)
@@ -255,7 +279,9 @@ def extract_observations(
             ],
         )
 
-    obs = tagged.groupBy("root").applyInPandas(run_group, schema=OBS_SCHEMA)
+    # read by the range sampler, the numbering, the final join and every
+    # action of the caller
+    obs = tagged.groupBy("root").applyInPandas(run_group, schema=OBS_SCHEMA).localCheckpoint()
     # E1: instance numbering per entry class, deterministic order. A
     # per-class row_number window would sort each class in ONE task — with
     # a handful of entry classes and 10^9 instances per class that's a

@@ -2,7 +2,7 @@
 
 Local-mode knobs mirror what we would set on a real cluster:
 - AQE on (runtime coalescing + skew-join splitting) — the engine's answer to
-  head-entity skew at 100 TB, alongside explicit salting (operators/skew.py).
+  head-entity skew at 100 TB.
 - shuffle.partitions ~ cores locally; on a 1000-executor cluster this is set
   to 2-3x total cores (AQE coalesces down).
 - Arrow enabled: every Python-side operator in this engine is vectorized

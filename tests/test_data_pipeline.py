@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdf_i2b2_converter_spark.plans.data_pipeline import (
+    assign_subtrees,
     extract_observations,
     reduce_basecode,
 )
@@ -145,7 +146,8 @@ def test_dense_id_scalable_plan_build_is_lazy(spark):
     plan-BUILD time, running the whole upstream as a side effect of merely
     composing the plan. Now zero jobs until an action. (extract_observations
     as a whole stays eager by design — assign_subtrees is an iterative
-    fixpoint whose rounds are driver actions.)"""
+    fixpoint whose rounds are driver actions, and the parsed input and the
+    DFS output are materialized once; the numbering on top stays lazy.)"""
     from rdf_i2b2_converter_spark.functions.ids import dense_id, dense_id_scalable
 
     df = spark.createDataFrame(
@@ -173,3 +175,38 @@ def test_dense_id_scalable_plan_build_is_lazy(spark):
     got = {tuple(r) for r in ids.collect()}
     want = {tuple(r) for r in dense_id(df, ["class_uri", "instance_uri"], "dense_id").collect()}
     assert got == want
+
+
+def test_assign_subtrees_raises_past_max_depth(spark):
+    """A tree deeper than max_depth used to come back truncated without
+    error, dropping its deep part from the observations."""
+    chain = _triples(spark, [(f"n{i}", "kg:next", f"n{i + 1}", None) for i in range(20)])
+    roots = spark.createDataFrame([("n0", "kg:Chain")], "instance string, class_uri string")
+    with pytest.raises(ValueError, match="deeper than max_depth=16"):
+        assign_subtrees(chain, roots, max_depth=16)
+    got = {r["node"] for r in assign_subtrees(chain, roots, max_depth=32).collect()}
+    assert got == {f"n{i}" for i in range(21)}
+
+
+def test_parse_and_dfs_run_once(spark, obs_graph):
+    """The input and the DFS are materialized inside extract_observations:
+    the caller's reindex joins and three writes must neither re-evaluate
+    the source nor re-run the Python DFS."""
+    from rdf_i2b2_converter_spark.operators.postprod import reindex
+
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    src = obs_graph.mapInPandas(counted, obs_graph.schema)
+    obs = extract_observations(src, ["kg:Diagnosis"])
+    obs, patient_map = reindex(obs, "patient_num")
+    obs, encounter_map = reindex(obs, "encounter_num")
+    for df in (patient_map, encounter_map, obs):
+        df.write.format("noop").mode("overwrite").save()
+    assert seen.value == obs_graph.count()
+    plan = obs._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan

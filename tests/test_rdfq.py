@@ -15,6 +15,13 @@ from rdf_i2b2_converter_spark.operators.rdfq import (
 )
 
 
+def _bare(spark, rows):
+    return spark.createDataFrame(
+        [(s, p, o, None, None) for s, p, o in rows],
+        "s string, p string, o string, o_datatype string, o_lang string",
+    )
+
+
 @pytest.fixture(scope="module")
 def triples(spark):
     rows = [
@@ -49,10 +56,7 @@ def triples(spark):
         ("v1", "rdf:type", "kg:GenderVS"),
         ("v2", "rdf:type", "kg:GenderVS"),
     ]
-    return spark.createDataFrame(
-        [(s, p, o, None, None) for s, p, o in rows],
-        "s string, p string, o string, o_datatype string, o_lang string",
-    ).cache()
+    return _bare(spark, rows).cache()
 
 
 def test_class_instances(spark, triples):
@@ -101,3 +105,24 @@ def test_property_ranges(spark, triples):
 def test_valueset_members(spark, triples):
     got = {r["member_uri"] for r in valueset_members(triples, "kg:GenderVS").collect()}
     assert got == {"v1", "v2"}
+
+
+def test_subproperty_closure_raises_on_round_bound(spark):
+    """A 10-link chain has 55 closure pairs; two rounds used to return 27 of
+    them silently. The bound must raise, and enough rounds must give all."""
+    chain = _bare(spark, [(f"p{i}", "rdfs:subPropertyOf", f"p{i + 1}") for i in range(10)])
+    with pytest.raises(ValueError, match="did not converge within 2 rounds"):
+        subproperty_closure(chain, max_rounds=2)
+    assert subproperty_closure(chain, max_rounds=10).count() == 55
+
+
+def test_rdf_list_members_raises_on_cyclic_rest(spark):
+    """A cyclic rdf:rest spine never reaches rdf:nil; the walk used to stop
+    at max_len without error."""
+    cyc = _bare(spark, [
+        ("_:a", "rdf:first", "kg:A"), ("_:a", "rdf:rest", "_:b"),
+        ("_:b", "rdf:first", "kg:B"), ("_:b", "rdf:rest", "_:a"),
+    ])
+    heads = spark.createDataFrame([("c", "_:a")], "ctx string, node string")
+    with pytest.raises(ValueError, match="longer than max_len=8 or cyclic"):
+        rdf_list_members(cyc, heads, max_len=8)
