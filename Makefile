@@ -3,7 +3,7 @@
 PY ?= python
 SF ?= /root/testdata/sf0.1
 
-.PHONY: test bench kgbench scaling demo clean
+.PHONY: test bench kgbench kgbench-pairs scaling demo clean
 
 test:
 	$(PY) -m pytest tests/ -x -q
@@ -19,6 +19,30 @@ TRACE ?= 0
 
 kgbench:
 	$(PY) kgbench/run.py --workload $(WL) --seed $(SEED) --seconds $(SECONDS) --trace $(TRACE)
+
+# interleaved BASE/working-tree pairs of one workload, one pair per seed;
+# the side that runs first alternates from pair to pair. BASE is exported
+# with git archive into a temp dir (removed at the end). Each invocation's
+# last JSON line goes to PAIRS_OUT as {"side", "seed", "result"}.
+BASE ?= HEAD~1
+SEEDS ?= 601 602 603 604 605 606 607 608 609 610
+PAIRS_OUT ?= kgbench_pairs.jsonl
+
+kgbench-pairs:
+	@set -e; base=$$(mktemp -d); trap 'rm -rf "$$base"' EXIT; \
+	git archive $(BASE) | tar -x -C "$$base"; \
+	: > "$(PAIRS_OUT)"; i=0; \
+	for s in $(SEEDS); do \
+	  if [ $$((i % 2)) -eq 0 ]; then order="base change"; else order="change base"; fi; \
+	  for side in $$order; do \
+	    if [ $$side = base ]; then dir="$$base"; else dir="$(CURDIR)"; fi; \
+	    echo "pair $$i seed $$s: $$side"; \
+	    line=$$(cd "$$dir" && $(PY) kgbench/run.py --workload $(WL) --seed $$s \
+	      --seconds $(SECONDS) --trace $(TRACE) | tail -n 1); \
+	    echo "{\"side\": \"$$side\", \"seed\": $$s, \"result\": $${line:-null}}" >> "$(PAIRS_OUT)"; \
+	  done; \
+	  i=$$((i + 1)); \
+	done
 
 scaling:
 	$(PY) bench_scaling.py

@@ -5,8 +5,9 @@ BDSC-CDS/RDF-i2b2-converter (reference at /root/reference, read-only) as an
 idiomatic PySpark DataFrame pipeline:
 
     pages (url, warc_ts, html, text, lang)
-      -> extract_text        (vectorized pandas UDF, byte-identical per url)
-      -> mention detection   (Aho-Corasick in mapInPandas, Arrow batches)
+      -> mention detection   (Aho-Corasick in mapInPandas, Arrow batches;
+                              extracts text from html where it is missing,
+                              byte-identical per url, in the same worker)
       -> entity linking      (broadcast gazetteer/ontology joins + window scoring)
       -> canonicalization    (connected components, large-star/small-star)
       -> triple emission     (deterministic URI minting, datatype formatting)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_SALT_BUCKETS
+from ..schemas import COMPONENT_MAPPING, local_frame
 
 
 def _union_find_rows(pairs) -> list[tuple[str, str]]:
@@ -49,9 +50,10 @@ def _union_find_rows(pairs) -> list[tuple[str, str]]:
 
 def _driver_union_find(e: DataFrame) -> DataFrame:
     """Collected union-find over an edge DataFrame; returned as a
-    (broadcastable) mapping DataFrame. Only for sub-threshold edge sets."""
+    (broadcastable, Arrow-built) mapping DataFrame. Only for sub-threshold
+    edge sets."""
     rows = _union_find_rows((r["u"], r["v"]) for r in e.collect())
-    return e.sparkSession.createDataFrame(rows, "id string, component string")
+    return local_frame(e.sparkSession, rows, COMPONENT_MAPPING)
 
 
 def _min_neighbor(e: DataFrame) -> DataFrame:
@@ -122,12 +124,9 @@ def connected_components(
     )
     if len(head) < cap:
         sym = {(r["u"], r["v"]) for r in head} | {(r["v"], r["u"]) for r in head}
-        if not sym:
-            return edges.sparkSession.createDataFrame([], "id string, component string")
         if len(sym) < 2 * driver_threshold:
-            return edges.sparkSession.createDataFrame(
-                _union_find_rows(sorted(sym)), "id string, component string"
-            )
+            rows = _union_find_rows(sorted(sym))
+            return local_frame(edges.sparkSession, rows, COMPONENT_MAPPING)
 
     # symmetrize WITH self-loops kept: a node whose only edges are
     # self-loops must still appear in the mapping (review r5), and keeping
@@ -144,7 +143,7 @@ def connected_components(
     )
     n_edges = e_all.count()
     if n_edges == 0:
-        return edges.sparkSession.createDataFrame([], "id string, component string")
+        return local_frame(edges.sparkSession, [], COMPONENT_MAPPING)
     # e_all is SYMMETRIZED (both directions), so compare against 2x the
     # documented per-input-edge threshold (review r5: the cutoff was
     # silently half of what callers tuned; self-loop rows now count once —

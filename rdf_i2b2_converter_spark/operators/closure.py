@@ -27,21 +27,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..config import BLACKLIST, MAX_BASECODE_LENGTH
 from ..functions.ids import chained_code
 
 #: rname (src/utils.py:130-132): strip the namespace prefix up to ':'.
 def _rname(col):
     return F.substring_index(col, ":", -1)
-
-
-def _closed_schema():
-    """schemas.ONTOLOGY_CLOSED — the single source of truth for the closed
-    table; its nullability was reconciled to the distributed plan's actual
-    output (review r6) so both closure paths are schema-identical."""
-    from .. import schemas
-
-    return schemas.ONTOLOGY_CLOSED
 
 
 def _driver_close(spark, rows, max_rounds: int, check_path_collisions: bool) -> DataFrame:
@@ -139,7 +131,7 @@ def _driver_close(spark, rows, max_rounds: int, check_path_collisions: bool) -> 
                     "one parent) — the materialized-path key would silently "
                     "merge unrelated subtrees; rename or disambiguate"
                 )
-    return spark.createDataFrame(result, _closed_schema())
+    return schemas.local_frame(spark, result, schemas.ONTOLOGY_CLOSED)
 
 
 def close_ontology(

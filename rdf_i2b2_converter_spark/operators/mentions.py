@@ -29,6 +29,7 @@ from __future__ import annotations
 import re
 from collections import deque
 from collections.abc import Iterator
+from itertools import repeat
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -36,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .. import schemas
 from ..config import TOKEN_SPLIT_REGEX
+from ..functions.text import extract_text_py
 
 
 class TokenAhoCorasick:
@@ -124,6 +126,7 @@ def detect_mentions(
     passthrough_cols: tuple[str, ...] = (),
     counter=None,
     surfaces_bc=None,
+    html_col: str | None = None,
 ) -> DataFrame:
     """pages(text/url) x gazetteer(surface) -> MENTIONS(url, surface,
     begin_pos, end_pos, n_occurrences [, passthrough...]). Token positions
@@ -143,6 +146,14 @@ def detect_mentions(
     mention rows per batch — per-partition counters without an extra pass
     (north_rule lineage+metrics; may over-count on task retries, like any
     Spark accumulator used for metrics).
+
+    ``html_col``: optional binary html column. A row whose ``text_col`` is
+    NULL gets its text from ``extract_text_py(html)`` inside the matcher's
+    own worker (the pinned function the ``extract_text`` pandas UDF wraps,
+    so the text is byte-identical). One Python worker per task instead of
+    an ``extract_text`` eval chained into this one. Only NULL triggers
+    extraction: an empty text is kept as it is. Callers that already
+    carry text leave it None.
     """
     spark = pages.sparkSession
     if surfaces_bc is not None:
@@ -176,7 +187,10 @@ def detect_mentions(
         for pdf in batches:
             rows: list[tuple] = []
             extras = [pdf[c] for c in passthrough_cols]
-            for i, (url, text) in enumerate(zip(pdf["url"], pdf[text_col])):
+            htmls = pdf[html_col] if html_col else repeat(None)
+            for i, (url, text, html) in enumerate(zip(pdf["url"], pdf[text_col], htmls)):
+                if text is None:
+                    text = extract_text_py(html)  # None when html is None
                 if not text:
                     continue
                 toks = [t for t in split_re.split(text.lower()) if t]
@@ -198,7 +212,7 @@ def detect_mentions(
                 rows, columns=base_cols + list(passthrough_cols)
             ).astype({"begin_pos": "int32", "end_pos": "int32", "n_occurrences": "int32"})
 
-    cols = dict.fromkeys(["url", text_col, *passthrough_cols])
+    cols = dict.fromkeys(c for c in ("url", text_col, html_col, *passthrough_cols) if c)
     return pages.select(*cols).mapInPandas(match, schema=out_schema)
 
 

@@ -3,8 +3,9 @@
 The reference's two entry points (src/main_ontology.py, src/main_data.py)
 plus awk post-production collapse into ONE Catalyst DAG here:
 
-  pages --extract_text--> --detect_mentions--> --link--> --canonicalize-->
-        --emit_triples--> partitioned sink (+ integrity check + metrics)
+  pages --detect_mentions (extracts text from html where missing)-->
+        --link--> --canonicalize--> --emit_triples-->
+        partitioned sink (+ integrity check + metrics)
 
 Resumability: the reference's append-mode CSV cannot resume
 (src/data_loader.py:34-43); we write per-``part_id`` parquet partitions and
@@ -71,29 +72,20 @@ def build_triples(
     mention_counter=None,
 ) -> DataFrame:
     """The full logical plan, lazily composed (no actions)."""
-    # Conditional extraction: `coalesce(text, extract_text(html))` LOOKS
-    # lazy but is not — Catalyst pulls Python UDFs into their own
-    # ArrowEvalPython node, which evaluates the UDF for EVERY row before
-    # coalesce picks. Splitting into two branches (a) skips the UDF
-    # entirely for rows that already carry text — at 100 TB that is the
-    # difference between a Python pass over the whole corpus and over the
-    # html-only slice — and (b) removes one of the chained Python worker
-    # pools from the hot stage (each ArrowEvalPython/mapInPandas node runs
-    # its own worker per task; stacking them oversubscribes physical cores
-    # — measured: the 3-deep chain anti-scaled beyond 16 threads on a
-    # 16-physical-core box while each stage alone scaled fine).
-    have_text = pages.filter(F.col("text").isNotNull())
-    need_text = pages.filter(F.col("text").isNull()).withColumn(
-        "text", extract_text(F.col("html"))
-    )
-    texted = have_text.unionByName(need_text)
+    # Extraction happens inside the matcher: a row without text gets it
+    # from its html in the matcher's own worker (html_col), so each page
+    # task runs ONE Python worker. A separate extract_text eval would be an
+    # ArrowEvalPython node chained into the MapInPandas one — two workers
+    # per task, stacked on the same cores. Nulling html where text is
+    # present keeps those rows' html bytes out of the Arrow hand-off.
+    pages = pages.withColumn("html", F.when(F.col("text").isNull(), F.col("html")))
     # lang/warc_ts ride through the matcher map-side (passthrough) — a
     # re-join of mentions to pages on url would need either a shuffle of
     # the full page set or a driver-built broadcast of it; both are the
     # kind of hidden serial cost that caps scaling.
     mentions = detect_mentions(
-        texted, gazetteer, passthrough_cols=("lang", "warc_ts"),
-        counter=mention_counter,
+        pages, gazetteer, passthrough_cols=("lang", "warc_ts"),
+        counter=mention_counter, html_col="html",
     )
     return build_triples_from_mentions(
         mentions, gazetteer, alias_edges, hash_fn, n_parts
@@ -160,6 +152,8 @@ def run_pipeline(
     done: set[int] = set(ledger["completed_parts"])
 
     todo = [p for p in range(n_parts) if p not in done]
+    # counted before the ledger is written: every part records it
+    metrics.n_pages = pages.count()
     if todo:
         pending = triples.filter(F.col("part_id").isin(todo))
         (
@@ -185,14 +179,13 @@ def run_pipeline(
             ledger["parts"][str(p)] = {
                 "n_triples": counts.get(p, 0),
                 "written_at": round(stamp, 2),
-                "n_source_pages": metrics.n_pages or None,
+                "n_source_pages": metrics.n_pages,
             }
         done.update(todo)
         ledger["completed_parts"] = sorted(done)
         write_text_file(spark, ledger_path, json.dumps(ledger))
 
     out = spark.read.parquet(os.path.join(sink_dir, "triples"))
-    metrics.n_pages = pages.count()
     metrics.n_triples = out.count()
     metrics.n_mentions = mention_acc.value  # 0 when all parts resumed
     if "html" in pages.columns:

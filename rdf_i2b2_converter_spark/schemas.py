@@ -65,6 +65,15 @@ ALIAS_EDGES = T.StructType(
     ]
 )
 
+#: connected_components output: every alias-graph node and the
+#: lexicographically smallest member of its component.
+COMPONENT_MAPPING = T.StructType(
+    [
+        T.StructField("id", T.StringType(), True),
+        T.StructField("component", T.StringType(), True),
+    ]
+)
+
 # ------------------------------------------------------------ intermediate
 
 #: Detected mentions (output of operators/mentions.py).
@@ -191,3 +200,23 @@ PATIENT_MAPPING = T.StructType(
         T.StructField("patient_num", T.LongType(), True),
     ]
 )
+
+
+# ------------------------------------------------------------ driver-built
+
+
+def local_frame(spark, rows, schema: T.StructType):
+    """DataFrame over driver-built ``rows`` (tuples in ``schema`` field
+    order), handed to Spark as one Arrow table. It plans as a
+    LocalRelation: no job runs and no Python worker starts.
+    ``createDataFrame(<list>)`` instead pickles the rows through a
+    PythonRDD, a job on a pool of plain Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

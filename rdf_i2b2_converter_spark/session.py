@@ -10,14 +10,16 @@ Local-mode knobs mirror what we would set on a real cluster:
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (duckdb timestamps are UTC-naive).
 
-Tuning note for python-heavy plans: a stage that chains Arrow python
-evals (mapInPandas -> pandas UDF -> ...) runs one python worker PER eval
-node per task alongside the JVM task thread — one task occupies ~2+
-cores. Submit such jobs with ``--conf spark.task.cpus=2`` (pass
+Tuning note for python-heavy plans: every Arrow python eval node in a
+stage (mapInPandas, pandas UDF, ...) runs its own python worker per task
+alongside the JVM task thread, so a stage that chains them occupies ~2+
+cores per task. Such a plan needs ``--conf spark.task.cpus=2`` (pass
 ``extra_conf={"spark.task.cpus": "2"}`` here); without the reservation
 the scheduler oversubscribes physical cores and throughput ANTI-scales
-past the physical-core count (measured on this box: local[32] 22.9k
-docs/s plain vs 46.9k with the reservation on the KG pipeline).
+past the physical-core count (measured at local[32] on a 16-physical-core
+host when the KG stage still chained two nodes: 22.9k docs/s plain vs
+46.9k with the reservation). The KG pipeline's hot stage now has one
+python node (detect_mentions extracts text itself), so it needs none.
 """
 
 from __future__ import annotations

@@ -222,3 +222,15 @@ def test_refine_and_apply_reject_colliding_columns(spark):
     )
     with pytest.raises(ValueError, match="rep_surface"):
         refine_clusters(bad2)
+
+
+def test_cc_driver_path_frames_use_no_python_worker(spark, corpus):
+    """The driver path's mapping is built from Arrow (a local relation):
+    no PythonRDD job and no plain Python worker pool, empty edge set
+    included. The schema stays the one the list-built frame had."""
+    want = spark.createDataFrame([], "id string, component string").schema
+    empty = spark.createDataFrame([], schemas.ALIAS_EDGES)
+    for edges in (corpus["alias_edges"], empty):
+        mapping = connected_components(edges)
+        assert "PythonRDD" not in mapping._jdf.queryExecution().toRdd().toDebugString()
+        assert mapping.schema == want

@@ -198,3 +198,13 @@ def test_driver_and_distributed_paths_identical(spark, corpus):
     a = sorted(tuple(r[c] for c in cols) for r in fast.collect())
     b = sorted(tuple(r[c] for c in cols) for r in slow.collect())
     assert a == b
+
+
+def test_driver_close_frame_uses_no_python_worker(spark, corpus):
+    """The driver BFS result is built from Arrow (a local relation): no
+    PythonRDD job and no plain Python worker pool."""
+    from rdf_i2b2_converter_spark import schemas
+
+    closed = close_ontology(corpus["ontology"])  # below driver_threshold
+    assert "PythonRDD" not in closed._jdf.queryExecution().toRdd().toDebugString()
+    assert closed.schema == schemas.ONTOLOGY_CLOSED

@@ -98,3 +98,66 @@ def test_link_full_payload_tiebreak_deterministic(spark):
     for parts in (1, 7):
         got = link_mentions(mentions.repartition(parts), gaz).collect()
         assert [r["type_uri"] for r in got] == ["kg:A"], parts
+
+
+def _mixed_pages(spark, n):
+    """gen_doc pages cycling through five html/text shapes: html only,
+    text only, both, neither, and an empty text beside its html."""
+    from rdf_i2b2_converter_spark import schemas
+
+    rows = []
+    for i in range(n):
+        d = syn.gen_doc(i)
+        html, text = {
+            0: (d["html"], None),
+            1: (None, d["text"]),
+            2: (d["html"], d["text"]),
+            3: (None, None),
+            4: (d["html"], ""),
+        }[i % 5]
+        rows.append((d["url"], d["warc_ts"], html, text, d["lang"]))
+    return spark.createDataFrame(rows, schemas.PAGES).repartition(3)
+
+
+def test_fused_extraction_equals_two_branch_composition(spark):
+    """html_col extracts text inside the matcher for NULL-text rows only:
+    the rows equal extract_text on the html-only branch unioned with the
+    text-carrying one, and the gen_doc oracle. An empty text is not
+    re-extracted (the branch split keys on isNull)."""
+    from rdf_i2b2_converter_spark.functions.text import extract_text
+
+    n = 60
+    pages = _mixed_pages(spark, n)
+    gaz = syn.gen_gazetteer(spark)
+    fused = detect_mentions(pages, gaz, html_col="html")
+    two_branch = detect_mentions(
+        pages.filter(F.col("text").isNotNull()).unionByName(
+            pages.filter(F.col("text").isNull()).withColumn("text", extract_text(F.col("html")))
+        ),
+        gaz,
+    )
+    got = sorted(map(tuple, fused.collect()))
+    assert got == sorted(map(tuple, two_branch.collect()))
+    oracle = syn.oracle_mentions(n)
+    exp = {
+        (url, s): c
+        for i, (url, d) in enumerate(oracle.items())
+        if i % 5 in (0, 1, 2)
+        for s, c in d.items()
+    }
+    assert {(r[0], r[1]): r[4] for r in got} == exp
+    assert exp, "the mixed corpus should contain mentions"
+
+
+def test_build_triples_runs_one_python_node(spark, tmp_path):
+    """Over a parquet pages source the triples plan holds exactly one
+    Python node: the matcher, extracting text itself. No extract_text
+    eval (ArrowEvalPython) is chained into it."""
+    from rdf_i2b2_converter_spark.plans.pipeline import build_triples
+
+    path = str(tmp_path / "pages")
+    _mixed_pages(spark, 20).write.parquet(path)
+    triples = build_triples(spark.read.parquet(path), syn.gen_gazetteer(spark))
+    plan = triples._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    assert plan.count("MapInPandas") == 1

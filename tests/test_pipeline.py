@@ -34,6 +34,8 @@ def test_pipeline_writes_metrics_and_ledger(spark, corpus, sink):
     assert m.n_triples > 0 and m.n_integrity_violations == 0
     ledger = json.load(open(os.path.join(sink, "_ledger.json")))
     assert ledger["completed_parts"] == list(range(8))
+    assert m.n_pages == corpus["n"]
+    assert [ledger["parts"][str(p)]["n_source_pages"] for p in range(8)] == [corpus["n"]] * 8
     assert os.path.exists(os.path.join(sink, "_metrics.json"))
 
 
@@ -116,7 +118,6 @@ def test_fused_plan_has_single_python_stage(spark):
     fused = build_triples_from_mentions(syn.gen_mentions(spark, 50), gaz)
     unfused = build_triples(syn.gen_pages(spark, 50), gaz)
     assert n_python_nodes(fused) == 1
-    # the unfused plan carries at least the synthesis + detection chain
-    # (the have/need-text branch split duplicates the source node in the
-    # printed tree, so the count is >= 2, not exactly 2)
-    assert n_python_nodes(unfused) >= 2
+    # the unfused plan chains the synthesis node into the matcher, which
+    # extracts any missing text itself (no separate extract_text node)
+    assert n_python_nodes(unfused) == 2
