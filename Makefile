@@ -5,8 +5,10 @@ SF ?= /root/testdata/sf0.1
 
 .PHONY: test bench kgbench kgbench-pairs scaling demo clean
 
+# the tier-1 command: every test runs (no -x), one Spark core per host CPU
 test:
-	$(PY) -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	SPARK_GRAFT_SF_DIR=$(SF) $(PY) bench.py

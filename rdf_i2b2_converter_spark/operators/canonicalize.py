@@ -161,7 +161,8 @@ def connected_components(
     prev_sig = None
     converged = False
     for _ in range(max_rounds):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        # lazy: the signature aggregate below materializes the round
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         sig = e.agg(
             F.count("*").alias("n"),
             F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),

@@ -15,11 +15,11 @@ not expanded) is a ``stop_expansion`` flag excluding nodes from the next
 frontier.
 
 Scale: ontologies are small relative to the corpus (10^5-10^7 nodes vs
-10^12 pages) — the closure checkpoints EVERY round (the emptiness check
-per round is then metadata-cheap, SURVEY.md §4); join strategy per round
-is left to AQE (broadcast for the usual small frontier, shuffle when a
-wide level's accumulated path strings would not fit a broadcast). The
-closed table is then itself broadcast against mentions.
+10^12 pages). The rounds run on ``fixpoint.expand``, which owns the
+checkpoint, emptiness test and bound; join strategy per round is left to
+AQE (broadcast for the usual small frontier, shuffle when a wide level's
+accumulated path strings would not fit a broadcast). The closed table is
+then itself broadcast against mentions.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..config import BLACKLIST, MAX_BASECODE_LENGTH
 from ..functions.ids import chained_code
+from .fixpoint import expand
 
 #: rname (src/utils.py:130-132): strip the namespace prefix up to ':'.
 def _rname(col):
@@ -225,10 +226,7 @@ def close_ontology(
         "stop_expansion",
     )
 
-    result = roots.localCheckpoint(eager=False)
-    frontier = result
-    converged = False
-    for level in range(1, max_rounds + 1):
+    def one_level(frontier: DataFrame, _seen: DataFrame, level: int) -> DataFrame:
         expandable = frontier.filter(~F.col("stop_expansion")).select(
             F.col("class_uri").alias("p_uri"),
             F.col("path").alias("p_path"),
@@ -237,7 +235,7 @@ def close_ontology(
         # no forced broadcast (review r5): the usual frontier is tiny and
         # AQE broadcasts it, but a wide level of a 10^7-node ontology with
         # accumulated path strings must be allowed to shuffle-join
-        nxt = (
+        return (
             nodes.alias("n")
             .join(expandable.alias("f"), F.col("n.parent_uri") == F.col("p_uri"))
             .select(
@@ -252,26 +250,15 @@ def close_ontology(
                 F.col("n.stop_expansion").alias("stop_expansion"),
             )
         )
-        # checkpoint every round: truncates the iterative lineage (SURVEY.md
-        # §4). Lazy + count (r6): the count triggers materialization, so
-        # each round is ONE Spark job instead of an eager-checkpoint job
-        # followed by a count job — the fixpoint's cost is driver-
-        # synchronous round latency, not data volume.
-        nxt = nxt.localCheckpoint(eager=False)
-        if nxt.count() == 0:
-            converged = True
-            break
-        result = result.unionByName(nxt)
-        frontier = nxt
-    if not converged:
-        # review r5: silently truncating left levels > max_rounds missing
-        # from METADATA (facts referencing them dropped downstream) and a
-        # parent cycle returned max_rounds of ever-growing bogus paths
-        raise ValueError(
-            f"close_ontology did not converge within {max_rounds} rounds: "
-            "the hierarchy is deeper than max_rounds or parent_uri has a "
-            "cycle; raise max_rounds or fix the ontology"
-        )
+
+    result = expand(
+        roots.localCheckpoint(eager=False),
+        one_level,
+        max_rounds,
+        f"close_ontology did not converge within {max_rounds} rounds: "
+        "the hierarchy is deeper than max_rounds or parent_uri has a "
+        "cycle; raise max_rounds or fix the ontology",
+    )
     if check_path_collisions:
         dup = (
             result.groupBy("path")
@@ -325,20 +312,12 @@ def attach_properties(
             )
         )
 
-    frontier = attach_to(
-        closed.filter(F.col("kind") == "class").select("class_uri", "level", "path", "code")
-    ).localCheckpoint(eager=True)
-    result = frontier
-    for _ in range(max_rounds):
-        frontier = attach_to(
-            frontier.select("class_uri", "level", "path", "code")
-        ).localCheckpoint(eager=True)
-        if frontier.count() == 0:
-            return result
-        result = result.unionByName(frontier)
-    raise ValueError(
+    return expand(
+        attach_to(closed.filter(F.col("kind") == "class")).localCheckpoint(eager=False),
+        lambda frontier, _seen, _k: attach_to(frontier),
+        max_rounds,
         f"attach_properties did not converge within {max_rounds} rounds: "
-        "property nesting is deeper than max_rounds or parent_uri cycles"
+        "property nesting is deeper than max_rounds or parent_uri cycles",
     )
 
 

@@ -19,18 +19,24 @@ pipeline computes per instance path (plans/data_pipeline.py) — the two
 sides meeting on equal codes IS the reference's ontology<->fact join
 contract (src/utils.py:89-127).
 
-Driver-side fixpoint of broadcast joins; each round one generation of the
-tree; localCheckpoint truncates lineage; a visited guard prevents cycles
-(the reference's explore-once guard, src/rdfwrappers.py:149-159).
+Driver-side fixpoint of broadcast joins on ``fixpoint.expand``; each
+round one generation of the tree (concepts -> properties -> ranges); a
+visited guard prevents cycles (the reference's explore-once guard,
+src/rdfwrappers.py:149-159).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.ids import chained_code
+from ..schemas import local_frame
+from .fixpoint import expand
 from .rdfq import domain_properties, property_ranges
+
+_URI = T.StructType([T.StructField("uri", T.StringType())])
 
 
 def _rname(col):
@@ -57,6 +63,9 @@ def build_modifier_tree(
     properties at odd levels; terminology/muted ranges become childless
     leaves; xsd ranges become value leaves (carry the property's code — the
     data side emits the literal under the property's chained code).
+    Raises ``ValueError`` when the tree has more than ``max_depth``
+    concept generations: a truncated tree would silently drop the deeper
+    modifiers from MODIFIER_DIMENSION.
     """
     spark = triples.sparkSession
 
@@ -82,7 +91,7 @@ def build_modifier_tree(
         .localCheckpoint(eager=True)
     )
 
-    roots = spark.createDataFrame([(c,) for c in root_classes], "uri string").select(
+    roots = local_frame(spark, [(c,) for c in root_classes], _URI).select(
         "uri",
         F.lit("concept").alias("kind"),
         F.lit(0).alias("level"),
@@ -91,13 +100,17 @@ def build_modifier_tree(
         F.lit(None).cast("string").alias("parent_code"),
         F.lit(None).cast("string").alias("parent_uri"),
     )
-    tree = roots.localCheckpoint(eager=True)
-    concept_frontier = tree
 
-    for depth in range(max_depth):
+    def generation(frontier: DataFrame, seen: DataFrame, _k: int) -> DataFrame:
+        # only plain concept nodes expand; explore-once guard on path
+        concepts = frontier.filter(F.col("kind") == "concept").join(
+            seen.select(F.col("uri").alias("__seen_uri"), F.col("level").alias("__seen_lvl")),
+            (F.col("uri") == F.col("__seen_uri")) & (F.col("level") > F.col("__seen_lvl")),
+            "left_anti",
+        )
         # concepts -> property (modifier) nodes
         mods = (
-            concept_frontier.alias("c")
+            concepts.alias("c")
             .join(F.broadcast(props).alias("p"), F.col("c.uri") == F.col("p.domain_class"))
             .select(
                 F.col("p.prop").alias("uri"),
@@ -108,11 +121,7 @@ def build_modifier_tree(
                 F.col("c.code").alias("parent_code"),
                 F.col("c.uri").alias("parent_uri"),
             )
-            .localCheckpoint(eager=True)
         )
-        if mods.count() == 0:
-            break
-        tree = tree.unionByName(mods)
 
         # property nodes -> range expansion
         expanded = (
@@ -152,19 +161,16 @@ def build_modifier_tree(
             .alias("code"),
             F.col("mcode").alias("parent_code"),
             F.col("muri").alias("parent_uri"),
-        ).localCheckpoint(eager=True)
-        if children.count() == 0:
-            break
-        tree = tree.unionByName(children)
-        # only plain concept children expand further; explore-once guard on path
-        concept_frontier = children.filter(F.col("kind") == "concept").join(
-            tree.select(F.col("uri").alias("__seen_uri"), F.col("level").alias("__seen_lvl")),
-            (F.col("uri") == F.col("__seen_uri")) & (F.col("level") > F.col("__seen_lvl")),
-            "left_anti",
-        ).localCheckpoint(eager=True)
-        if concept_frontier.count() == 0:
-            break
-    return tree
+        )
+        return mods.unionByName(children)
+
+    return expand(
+        roots,
+        generation,
+        max_depth + 1,
+        f"build_modifier_tree: the tree is deeper than max_depth={max_depth} "
+        "concept generations; raise max_depth or check the schema",
+    )
 
 
 def check_fact_codes(obs: DataFrame, tree: DataFrame) -> DataFrame:

@@ -44,7 +44,11 @@ def reindex(
         mapping = dense_id_scalable(fact, [id_col], "new_id")
         joined = fact.join(mapping, id_col, "left")
     else:
-        mapping = dense_id(fact, [id_col], "new_id")
+        # computed once: the mapping write and every action on the
+        # rewritten fact read the same numbering instead of re-running
+        # the single-task window (under AQE the checkpoint runs the
+        # mapping's shuffle stages here, at the call)
+        mapping = dense_id(fact, [id_col], "new_id").localCheckpoint(eager=False)
         joined = fact.join(F.broadcast(mapping), id_col, "left")
     rewritten = joined.withColumn(
         new_col, F.coalesce(F.col("new_id"), F.lit(-1))

@@ -7,13 +7,16 @@ lookup with RDF-list expansion (C3, src/rdfwrappers.py:294-322), and
 valueset membership (C4, src/rdfwrappers.py:452-467). Here each is a
 composition of joins/filters over TRIPLES_RAW(s, p, o, ...) — Catalyst
 replaces rdflib's nested-index engine, and the only iteration (the rdf:rest
-list spine, subPropertyOf+) is a bounded driver loop of self-joins.
+list spine, subPropertyOf+) is a bounded driver loop of self-joins on
+``fixpoint.expand``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import expand
 
 RDF_TYPE = "rdf:type"
 RDFS_DOMAIN = "rdfs:domain"
@@ -37,8 +40,9 @@ def class_instances(triples: DataFrame, class_uris: list[str]) -> DataFrame:
 
 def rdf_list_members(triples: DataFrame, heads: DataFrame, max_len: int = 64) -> DataFrame:
     """Expand rdf:first/rdf:rest list spines: heads(ctx, node) ->
-    (ctx, member). Bounded driver loop — RDF lists in ontologies are short
-    (union-of domains/ranges), so each round is a broadcast join. Raises
+    (ctx, member). The rdf:rest spine expands as a bounded driver loop —
+    RDF lists in ontologies are short (union-of domains/ranges), so each
+    round is a broadcast join — and rdf:first is joined once. Raises
     ``ValueError`` when a spine is longer than ``max_len`` or cyclic."""
     first = triples.filter(F.col("p") == RDF_FIRST).select(
         F.col("s").alias("node"), F.col("o").alias("member")
@@ -46,22 +50,16 @@ def rdf_list_members(triples: DataFrame, heads: DataFrame, max_len: int = 64) ->
     rest = triples.filter((F.col("p") == RDF_REST) & (F.col("o") != RDF_NIL)).select(
         F.col("s").alias("node"), F.col("o").alias("next_node")
     )
-    frontier = heads.select("ctx", "node").localCheckpoint(eager=True)
-    out = None
-    for _ in range(max_len):
-        members = frontier.join(F.broadcast(first), "node").select("ctx", "member")
-        out = members if out is None else out.unionByName(members)
-        frontier = (
-            frontier.join(F.broadcast(rest), "node")
-            .select("ctx", F.col("next_node").alias("node"))
-            .localCheckpoint(eager=True)
-        )
-        if frontier.count() == 0:
-            return out.distinct()
-    raise ValueError(
+    spine = expand(
+        heads.select("ctx", "node").localCheckpoint(eager=False),
+        lambda frontier, _seen, _k: frontier.join(F.broadcast(rest), "node").select(
+            "ctx", F.col("next_node").alias("node")
+        ),
+        max_len,
         f"rdf_list_members: an rdf:rest spine is longer than max_len={max_len} "
-        "or cyclic; raise max_len or fix the list"
+        "or cyclic; raise max_len or fix the list",
     )
+    return spine.join(F.broadcast(first), "node").select("ctx", "member").distinct()
 
 
 def _domain_pairs(triples: DataFrame) -> DataFrame:
@@ -90,24 +88,18 @@ def subproperty_closure(triples: DataFrame, max_rounds: int = 32) -> DataFrame:
     edges = triples.filter(F.col("p") == RDFS_SUBPROP).select(
         F.col("s").alias("sub"), F.col("o").alias("sup")
     ).distinct().localCheckpoint(eager=True)
-    closure = edges
-    frontier = edges
-    for _ in range(max_rounds):
-        nxt = (
+    return expand(
+        edges,
+        lambda frontier, seen, _k: (
             frontier.alias("f")
             .join(F.broadcast(edges).alias("e"), F.col("f.sup") == F.col("e.sub"))
             .select(F.col("f.sub").alias("sub"), F.col("e.sup").alias("sup"))
-            .join(closure, ["sub", "sup"], "left_anti")
+            .join(seen, ["sub", "sup"], "left_anti")
             .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if nxt.count() == 0:
-            return closure
-        closure = closure.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    raise ValueError(
+        ),
+        max_rounds,
         f"subproperty_closure did not converge within {max_rounds} rounds: "
-        "the rdfs:subPropertyOf chain is too long; raise max_rounds"
+        "the rdfs:subPropertyOf chain is too long; raise max_rounds",
     )
 
 

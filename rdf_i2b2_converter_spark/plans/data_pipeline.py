@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..config import MAX_BASECODE_LENGTH, VALUE_DISPATCH
 from ..functions.ids import dense_id_scalable
+from ..operators.fixpoint import expand
 from ..operators.rdfq import RDF_TYPE, class_instances
 
 RDFS_LABEL = "rdfs:label"
@@ -79,8 +80,9 @@ def assign_subtrees(
 ) -> DataFrame:
     """roots(instance, class_uri) -> (root, node): every resource node
     reachable from an entry instance via object links. Bounded-depth
-    iterative broadcast join (instance trees are shallow — the reference
-    recursion depth is bounded by the ontology's property nesting).
+    iterative broadcast join on ``fixpoint.expand`` (instance trees are
+    shallow — the reference recursion depth is bounded by the ontology's
+    property nesting).
 
     Raises ``ValueError`` when a node lies deeper than ``max_depth`` links
     below its root: returning the truncated subtree would silently drop
@@ -90,24 +92,19 @@ def assign_subtrees(
         .select(F.col("s").alias("node"), F.col("o").alias("child"))
         .distinct()
     )
-    frontier = roots.select(F.col("instance").alias("root"), F.col("instance").alias("node"))
-    out = frontier
     # round k finds the nodes k links below their root; the round past
     # max_depth must come back empty
-    for _ in range(max_depth + 1):
-        frontier = (
+    return expand(
+        roots.select(F.col("instance").alias("root"), F.col("instance").alias("node")),
+        lambda frontier, seen, _k: (
             frontier.join(edges, "node")
             .select("root", F.col("child").alias("node"))
-            .join(out, ["root", "node"], "left_anti")  # explore-once guard
+            .join(seen, ["root", "node"], "left_anti")  # explore-once guard
             .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if frontier.count() == 0:
-            return out
-        out = out.unionByName(frontier)
-    raise ValueError(
+        ),
+        max_depth + 1,
         f"assign_subtrees: an instance tree is deeper than max_depth={max_depth} "
-        "links; raise max_depth or check the instance graph"
+        "links; raise max_depth or check the instance graph",
     )
 
 

@@ -135,29 +135,6 @@ ONTOLOGY_CLOSED = T.StructType(
     ]
 )
 
-#: Multimodal assets: opaque binary + typed metadata (training-data ops).
-ASSETS = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType(), False),
-        T.StructField("url", T.StringType(), True),
-        T.StructField("modality", T.StringType(), False),  # image|audio|video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 # ------------------------------------------------------- star-schema dims
 
 #: PROVIDER_DIMENSION (src/starschema.py:96-105): path + id per provider.

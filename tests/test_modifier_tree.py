@@ -118,3 +118,22 @@ def test_mixed_range_list_expands_plain_concept(spark):
     assert kinds[("kg:ClinicalNote", 2)] == "concept"
     assert kinds[("kg:hasText", 3)] == "modifier"
     assert kinds[("xsd:string", 4)] == "value_leaf"
+
+
+def test_modifier_tree_raises_past_max_depth(spark):
+    """A chain of 6 concept generations (C0 -p0-> C1 ... -p5-> C6, 13 tree
+    rows) fits max_depth 6 and 12, and raises at max_depth 2 instead of
+    returning the first two generations as if they were the whole tree."""
+    rows = []
+    for i in range(6):
+        rows += [
+            (f"kg:p{i}", "rdfs:domain", f"kg:C{i}", None),
+            (f"kg:p{i}", "rdfs:range", f"kg:C{i + 1}", None),
+        ]
+    triples = _df(spark, rows)
+    for max_depth in (6, 12):
+        tree = build_modifier_tree(triples, ["kg:C0"], max_depth=max_depth).collect()
+        assert len(tree) == 13
+        assert max(r["level"] for r in tree) == 12
+    with pytest.raises(ValueError, match="max_depth=2"):
+        build_modifier_tree(triples, ["kg:C0"], max_depth=2)

@@ -24,6 +24,18 @@ def test_reindex_dense_and_mapped(spark):
     assert got == {1: 2, 2: 1, 3: 2}
 
 
+def test_reindex_mapping_computed_once(spark, tmp_path):
+    """The broadcast branch materializes its mapping: once the mapping is
+    written, the rewritten fact reads it back instead of re-running the
+    single-task numbering window."""
+    fact = spark.createDataFrame([("p9", 1), ("p2", 2), ("p9", 3)], "pid string, v int")
+    rewritten, mapping = reindex(fact, "pid", "pnum")
+    mapping.write.parquet(str(tmp_path / "mapping"))
+    plan = rewritten._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in plan, plan
+    assert {(r["v"], r["pnum"]) for r in rewritten.collect()} == {(1, 2), (2, 1), (3, 2)}
+
+
 def test_fill_defaults(spark):
     df = spark.createDataFrame(
         [(None, "x"), (5, None)], "enc int, provider string"
