@@ -3,7 +3,7 @@
 PY ?= python
 SF ?= /root/testdata/sf0.1
 
-.PHONY: test bench kgbench kgbench-pairs scaling demo clean
+.PHONY: test bench kgbench kgbench-pairs kgbench-summary scaling demo clean
 
 # the tier-1 command: every test runs (no -x), one Spark core per host CPU
 test:
@@ -45,6 +45,12 @@ kgbench-pairs:
 	  done; \
 	  i=$$((i + 1)); \
 	done
+
+# per end-to-end metric of PAIRS_OUT: each side's median and quartiles,
+# the change's wins, and whether a gain holds (>= 9/10 wins, median gap
+# larger than the base's interquartile range)
+kgbench-summary:
+	$(PY) kgbench_summary.py "$(PAIRS_OUT)"
 
 scaling:
 	$(PY) bench_scaling.py

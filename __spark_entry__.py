@@ -1272,7 +1272,7 @@ SELECT uri, kind, level, path, code, parent_code, parent_uri FROM tree
 def _g8_observation_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G7/G8 — instance-tree DFS with context inheritance over an instance
     graph synthesized from events: each event becomes a tiny observation
-    tree; rows-only (recursive applyInPandas, not SQL-expressible)."""
+    tree; rows-only (a recursive Python DFS per instance, not SQL-expressible)."""
     from rdf_i2b2_converter_spark.plans.data_pipeline import extract_observations
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") < 500)

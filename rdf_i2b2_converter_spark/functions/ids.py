@@ -104,11 +104,13 @@ def dense_id_scalable(df, key_cols: list[str], id_col: str = "dense_id", num_par
     bit-identical to dense_id (asserted in tests): range partitions are
     globally ordered, so offsets + local ranks compose to the global rank.
 
-    Lazy at plan-build (review r3): the old form eagerly materialized the
-    checkpoint AND collected counts to the driver while merely composing
-    the plan; now only Spark's own RangePartitioner boundary sketch runs
-    at build (inherent to repartitionByRange — it samples when the RDD is
-    created) and everything else waits for an action. The
+    No collect at plan-build (review r3): the old form eagerly
+    materialized the checkpoint AND collected counts to the driver while
+    merely composing the plan. Now Spark's own RangePartitioner boundary
+    sketch runs at build (inherent to repartitionByRange — it samples when
+    the RDD is created), and under AQE the lazy checkpoint still runs the
+    upstream shuffle stages (the distinct) as jobs at the call; the
+    numbering itself waits for an action. The
     localCheckpoint(eager=False) pins the sampled boundaries — both the
     counts subtree and the probe subtree reference the SAME checkpointed
     plan, so boundaries are drawn once and shared; without it the two

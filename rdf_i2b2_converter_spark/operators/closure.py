@@ -207,9 +207,9 @@ def close_ontology(
 
     # materialize the (small) node table once — it is re-joined every
     # round; dropDuplicates guards against accidental exact-duplicate
-    # input rows multiplying the whole subtree. Lazy checkpoint (r6):
-    # round 1's job materializes it alongside its own work instead of a
-    # separate driver-synchronous job up front.
+    # input rows multiplying the whole subtree. Lazy checkpoint: under AQE
+    # its exchanges still run as jobs here, at the call; only its final
+    # stage waits for round 1's count.
     nodes = classes.join(flags, "class_uri", "left").select(
         "class_uri", "parent_uri", "kind", "terminology", "stop_expansion"
     ).dropDuplicates().localCheckpoint(eager=False)

@@ -19,9 +19,10 @@ def expand(
     ``step(frontier, seen, k)``: ``frontier`` is round k-1 (the seed for
     k = 1), ``seen`` the union of the seed and rounds 1..k-1. Each round
     is ``localCheckpoint(eager=False)`` (truncating the lineage) and its
-    emptiness ``count()`` materializes it: no separate checkpoint job.
-    Under AQE the round's broadcasts and shuffle stages still run as jobs
-    of their own when the checkpoint is taken. Raises ``ValueError(error)``
+    emptiness ``count()`` materializes the final stage. The lazy form does
+    not save the round's other jobs: under AQE its broadcasts and shuffle
+    stages run as jobs of their own when the checkpoint is taken, about
+    three per round for a broadcast-join step. Raises ``ValueError(error)``
     when round ``max_rounds`` still adds rows: returning the rows found so
     far would truncate the closure silently."""
     seen = frontier = seed

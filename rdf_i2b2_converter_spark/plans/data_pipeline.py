@@ -5,41 +5,56 @@ DataLoader/InformationTree/ContextFactory machinery of src/data_loader.py)
 over the triples DataFrame:
 
 1. entry-class instances (C1, get_next_class_instances:95-123);
-2. per-instance subtree assignment — an iterative bounded-depth join that
-   tags every reachable node with its root instance (the distributed form
-   of "each instance explores its own tree");
-3. groupBy(root).applyInPandas running the instance-local DFS
-   (explore_obstree:236-293): hash-chained basecodes (G6), context capture
-   with the overwrite policy (ContextFactory.digest:320-352), path-end
-   detection (is_pathend:208-234, G8), value dispatch on literal ends
-   (ObservationRegister.digest:142-170 with COLUMNS_MAPPING.VALUE);
-4. instance numbering per entry class (E1), mandatory-context gate (B7).
+2. per-instance subtree assignment — every node reachable from an entry
+   instance, tagged with that root: a per-root Python BFS over one capped
+   collect of the object links when the links and the result fit under
+   ``driver_threshold``, otherwise the bounded-depth join on
+   ``fixpoint.expand`` (the distributed form of "each instance explores
+   its own tree");
+3. one streamed Python pass running the instance-local DFS
+   (explore_obstree:236-293): the tagged triples are hash-partitioned by
+   root and sorted, and ``mapInArrow`` cuts the stream into instance
+   groups: hash-chained basecodes (G6), context capture with the
+   overwrite policy (ContextFactory.digest:320-352), path-end detection
+   (is_pathend:208-234, G8), value dispatch on literal ends
+   (ObservationRegister.digest:142-170 with COLUMNS_MAPPING.VALUE),
+   mandatory-context gate (B7);
+4. instance numbering per entry class (E1): a driver-side sort of the
+   distinct (class, instance) pairs under ``driver_threshold``, otherwise
+   range-partitioned dense ids.
 
 Instance trees are small and independent — the per-group Python DFS is the
-reference algorithm verbatim over a few dozen rows, Arrow-batched; all the
-heavy lifting (subtree assignment, grouping, numbering) is DataFrame ops.
+reference algorithm verbatim over a few dozen rows, Arrow-batched. The
+driver paths exist because a small instance graph is bound by job
+latency: every fixpoint round and every numbering stage is a Spark job,
+where one capped collect does the same work. Each path is chosen from the
+observed input size, and the distributed forms stay for large graphs.
 
-Two intermediates are materialized once with ``localCheckpoint()``: the
-parsed input (projected to ``s, p, o, o_datatype``) and the DFS output.
-Both come out of Python stages (a parser's ``mapInPandas``, the
-``applyInPandas`` DFS). Without the checkpoints every later action — each
-subtree round, the range sampler of the numbering, a caller's reindex
-joins and writes — re-runs those stages from the source.
+Three frames are materialized once with ``localCheckpoint()``: the parsed
+input (projected to ``s, p, o, o_datatype``), the DFS output and the
+numbered result. The first two come out of Python stages (a parser's
+``mapInPandas``, the DFS pass); without the checkpoints every later action
+— each subtree round, the numbering, a caller's reindex joins and writes —
+would re-run those stages from the source. The third keeps the caller's
+two reindex mappings and its writes from recomputing the numbering.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections import defaultdict
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..config import MAX_BASECODE_LENGTH, VALUE_DISPATCH
 from ..functions.ids import dense_id_scalable
 from ..operators.fixpoint import expand
 from ..operators.rdfq import RDF_TYPE, class_instances
+from ..schemas import local_frame
 
 RDFS_LABEL = "rdfs:label"
 
@@ -50,6 +65,17 @@ OBS_SCHEMA = (
     "patient_num string, encounter_num string, start_date string, units_cd string"
 )
 CONTEXT_COLS = ("patient_num", "encounter_num", "start_date", "units_cd")
+
+_SUBTREE = T.StructType(
+    [T.StructField("root", T.StringType()), T.StructField("node", T.StringType())]
+)
+_INSTANCE_NUMS = T.StructType(
+    [
+        T.StructField("class_uri", T.StringType()),
+        T.StructField("instance_uri", T.StringType()),
+        T.StructField("instance_num", T.IntegerType()),
+    ]
+)
 
 #: Context mapping — analog of data_config COLUMNS_MAPPING["CONTEXT"]:
 #: object type -> column, inner-predicate chain, overwrite + mandatory flags.
@@ -75,14 +101,52 @@ def reduce_basecode(uri: str, prefix: str, cap: int = MAX_BASECODE_LENGTH) -> st
     return hashlib.sha256((prefix + uri).encode()).hexdigest()[:cap]
 
 
+def _driver_subtrees(
+    links: list, roots: list, max_depth: int, max_rows: int, error: str
+) -> list[tuple[str, str]] | None:
+    """Per-root BFS over collected ``(node, child)`` links with the same
+    rows as the distributed branch: ``(root, root)`` once per roots row,
+    every other reachable node once per distinct root. ``None`` when the
+    result would exceed ``max_rows``."""
+    children: dict[str, list[str]] = defaultdict(list)
+    for node, child in links:
+        children[node].append(child)
+    out = [(r, r) for r in roots]
+    if len(out) > max_rows:
+        return None
+    for root in dict.fromkeys(roots):
+        seen, frontier = {root}, [root]
+        for depth in range(max_depth + 1):
+            nxt = []
+            for node in frontier:
+                for child in children.get(node, ()):
+                    if child not in seen:  # explore-once guard
+                        seen.add(child)
+                        nxt.append(child)
+            if not nxt:
+                break
+            if depth == max_depth:
+                raise ValueError(error)
+            out.extend((root, c) for c in nxt)
+            if len(out) > max_rows:
+                return None
+            frontier = nxt
+    return out
+
+
 def assign_subtrees(
-    triples: DataFrame, roots: DataFrame, max_depth: int = 16
+    triples: DataFrame, roots: DataFrame, max_depth: int = 16, driver_threshold: int = 100_000
 ) -> DataFrame:
     """roots(instance, class_uri) -> (root, node): every resource node
-    reachable from an entry instance via object links. Bounded-depth
-    iterative broadcast join on ``fixpoint.expand`` (instance trees are
+    reachable from an entry instance via object links (instance trees are
     shallow — the reference recursion depth is bounded by the ontology's
     property nesting).
+
+    ``driver_threshold``: when the distinct object links and the result
+    both fit under it, one capped collect of the links and a per-root
+    Python BFS replace the distributed branch, a bounded-depth iterative
+    broadcast join on ``fixpoint.expand`` that costs a few Spark jobs per
+    depth level. Both paths produce the same rows (pytest-pinned).
 
     Raises ``ValueError`` when a node lies deeper than ``max_depth`` links
     below its root: returning the truncated subtree would silently drop
@@ -92,6 +156,17 @@ def assign_subtrees(
         .select(F.col("s").alias("node"), F.col("o").alias("child"))
         .distinct()
     )
+    error = (
+        f"assign_subtrees: an instance tree is deeper than max_depth={max_depth} "
+        "links; raise max_depth or check the instance graph"
+    )
+    links = edges.limit(driver_threshold + 1).collect()
+    if len(links) <= driver_threshold:
+        # every roots row is an output row, so the output cap bounds this collect
+        heads = [r[0] for r in roots.select("instance").limit(driver_threshold + 1).collect()]
+        rows = _driver_subtrees(links, heads, max_depth, driver_threshold, error)
+        if rows is not None:
+            return local_frame(triples.sparkSession, rows, _SUBTREE)
     # round k finds the nodes k links below their root; the round past
     # max_depth must come back empty
     return expand(
@@ -103,8 +178,39 @@ def assign_subtrees(
             .distinct()
         ),
         max_depth + 1,
-        f"assign_subtrees: an instance tree is deeper than max_depth={max_depth} "
-        "links; raise max_depth or check the instance graph",
+        error,
+    )
+
+
+def number_instances(obs: DataFrame, driver_threshold: int = 100_000) -> DataFrame:
+    """E1: ``(class_uri, instance_uri, instance_num)``, instances numbered
+    1..n within each entry class in ``instance_uri`` order.
+
+    Under ``driver_threshold`` distinct pairs: one capped collect, sorted
+    in Python — code-point order equals Spark's UTF-8 byte order for
+    strings. Above it: a per-class row_number window would sort each class
+    in ONE task — with a handful of entry classes and 10^9 instances per
+    class that's a serial stage. Instead: range-partitioned global dense
+    ids over (class, instance) order (functions/ids.dense_id_scalable —
+    every partition numbers itself), then subtract each class's first
+    global id. Per-class numbering = global rank within the class because
+    range partitions are globally ordered. Both forms are bit-identical to
+    the window form (asserted in tests/test_data_pipeline.py)."""
+    pairs = obs.select("class_uri", "instance_uri")
+    head = pairs.distinct().limit(driver_threshold + 1).collect()
+    if len(head) <= driver_threshold:
+        rows, last, n = [], None, 0
+        for class_uri, instance_uri in sorted(map(tuple, head)):
+            n = n + 1 if class_uri == last else 1
+            last = class_uri
+            rows.append((class_uri, instance_uri, n))
+        return local_frame(obs.sparkSession, rows, _INSTANCE_NUMS)
+    gids = dense_id_scalable(pairs, ["class_uri", "instance_uri"], id_col="__gid")
+    class_start = gids.groupBy("class_uri").agg(F.min("__gid").alias("__cmin"))
+    return (
+        gids.join(F.broadcast(class_start), "class_uri")
+        .withColumn("instance_num", (F.col("__gid") - F.col("__cmin") + 1).cast("int"))
+        .drop("__gid", "__cmin")
     )
 
 
@@ -119,11 +225,17 @@ def extract_observations(
     inherited context and chained basecodes. Output numbered per class
     (E1) and gated on mandatory context (B7).
 
-    Eager: the subtree fixpoint runs driver actions, and two intermediates
-    are materialized with ``localCheckpoint()`` — the input triples
-    (projected to ``s, p, o, o_datatype``) and the DFS output. Actions on
-    the returned frame therefore re-run neither the input's parse nor the
-    Python DFS; only the numbering and the final join stay lazy."""
+    Eager: the subtree assignment and the numbering collect to the driver
+    (or, past ``driver_threshold``, run driver-synchronous fixpoint rounds
+    and a range sampler), and three frames are materialized with
+    ``localCheckpoint()`` — the input triples (projected to ``s, p, o,
+    o_datatype``), the DFS output and the returned numbered frame. Actions
+    on the returned frame therefore re-run neither the input's parse, nor
+    the Python DFS, nor the numbering.
+
+    Within an instance, the DFS reads the instance's triples sorted by
+    ``(s, p, o, o_datatype)``, so "first" in the first-wins context policy
+    (``overwrite=False``) is that order, whatever the input's partitioning."""
     ctx_cfg = context_config if context_config is not None else DEFAULT_CONTEXT
     spark = triples.sparkSession
     # read by the class lookup, every subtree round and the tagging join
@@ -143,18 +255,17 @@ def extract_observations(
         {"ctx": ctx_cfg, "terms": tuple(terminology_prefixes), "values": VALUE_DISPATCH}
     )
 
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run_group(root: str, class_uri: str, rows: list[tuple]) -> list[dict]:
+        """One instance's DFS over its ``(s, p, o, o_datatype)`` rows."""
         cfg = bc_ctx.value
         ctx_map, terms, value_map = cfg["ctx"], cfg["terms"], cfg["values"]
-        root = pdf["root"].iloc[0]
-        class_uri = pdf["class_uri"].iloc[0]
         # adjacency: subject -> [(pred, obj, datatype)]
         adj: dict[str, list[tuple[str, str, str | None]]] = {}
         types: dict[str, str] = {}
-        for s, p, o, dt in zip(pdf["s"], pdf["p"], pdf["o"], pdf["o_datatype"]):
-            if p == RDF_TYPE and (dt is None or pd.isna(dt)):
+        for s, p, o, dt in rows:
+            if p == RDF_TYPE and dt is None:
                 types[s] = o
-            adj.setdefault(s, []).append((p, o, None if (dt is None or pd.isna(dt)) else dt))
+            adj.setdefault(s, []).append((p, o, dt))
 
         out_rows: list[dict] = []
 
@@ -268,36 +379,40 @@ def extract_observations(
                     explore(o, basecode, context, False, depth + 1)
 
         explore(root, "", {}, True, 0)
-        return pd.DataFrame(
-            out_rows,
-            columns=[
-                "instance_uri", "class_uri", "concept_cd", "modifier_cd",
-                "valtype_cd", "tval_char", "nval_num", *CONTEXT_COLS,
-            ],
-        )
+        return out_rows
 
-    # read by the range sampler, the numbering, the final join and every
-    # action of the caller
-    obs = tagged.groupBy("root").applyInPandas(run_group, schema=OBS_SCHEMA).localCheckpoint()
-    # E1: instance numbering per entry class, deterministic order. A
-    # per-class row_number window would sort each class in ONE task — with
-    # a handful of entry classes and 10^9 instances per class that's a
-    # serial stage. Instead: range-partitioned global dense ids over
-    # (class, instance) order (functions/ids.dense_id_scalable — every
-    # partition numbers itself), then subtract each class's first global
-    # id. Per-class numbering = global rank within the class because range
-    # partitions are globally ordered; bit-identical to the window form
-    # (asserted in tests/test_data_pipeline.py).
-    gids = dense_id_scalable(
-        obs.select("class_uri", "instance_uri"), ["class_uri", "instance_uri"],
-        id_col="__gid",
+    def run_partition(batches):
+        """Cut the root-sorted stream into instance groups. A group that
+        straddles two Arrow batches is carried into the next one, so
+        memory holds one group and one batch's output."""
+        group, rows = None, []
+        for batch in batches:
+            out: list[dict] = []
+            c = batch.to_pydict()
+            for root, class_uri, *row in zip(
+                c["root"], c["class_uri"], c["s"], c["p"], c["o"], c["o_datatype"]
+            ):
+                if group is None or root != group[0]:
+                    if rows:
+                        out += run_group(*group, rows)
+                    group, rows = (root, class_uri), []
+                rows.append(row)
+            if out:
+                yield pa.RecordBatch.from_pylist(out, schema=obs_arrow)
+        if rows:
+            yield pa.RecordBatch.from_pylist(run_group(*group, rows), schema=obs_arrow)
+
+    # read by the numbering and the final join. Sorting within the group
+    # (class_uri first, so a group's class is its smallest one) makes the
+    # DFS independent of the partitioning
+    obs_arrow = to_arrow_schema(T.StructType.fromDDL(OBS_SCHEMA))
+    obs = (
+        tagged.repartition("root")
+        .sortWithinPartitions("root", "class_uri", "s", "p", "o", "o_datatype")
+        .mapInArrow(run_partition, OBS_SCHEMA)
+        .localCheckpoint()
     )
-    class_start = gids.groupBy("class_uri").agg(F.min("__gid").alias("__cmin"))
-    nums = (
-        gids.join(F.broadcast(class_start), "class_uri")
-        .withColumn("instance_num", (F.col("__gid") - F.col("__cmin") + 1).cast("int"))
-        .drop("__gid", "__cmin")
-    )
-    # no broadcast hint: the mapping is one row per INSTANCE — AQE
+    # materialized: read by the caller's reindex mappings and writes. No
+    # broadcast hint: the numbering is one row per INSTANCE — AQE
     # broadcasts it when small and shuffle-joins when it isn't
-    return obs.join(nums, ["class_uri", "instance_uri"])
+    return obs.join(number_instances(obs), ["class_uri", "instance_uri"]).localCheckpoint()

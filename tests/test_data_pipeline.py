@@ -3,14 +3,23 @@ chained basecodes, value dispatch, mandatory-context gate — expected rows
 hand-computed like the reference's fixture tests (tests/test_dataloader.py).
 """
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from rdf_i2b2_converter_spark.plans.data_pipeline import (
     assign_subtrees,
     extract_observations,
+    number_instances,
     reduce_basecode,
 )
+
+
+#: jobs of extract_observations + two reindex calls + three writes on
+#: ``obs_graph`` (measured; the same flow ran 60 jobs before the driver
+#: paths and the materialized numbering)
+JOB_BUDGET = 23
 
 
 def _triples(spark, rows):
@@ -118,25 +127,41 @@ def test_join_key_parity_with_ontology_side(spark, obs):
 
 
 def test_instance_numbering_matches_window_form(spark, obs):
-    """VERDICT r2 #3: the range-partitioned E1 numbering must be
-    bit-identical to the per-class row_number window, with no per-class
-    single-task sort in the plan."""
+    """VERDICT r2 #3: the E1 numbering must be bit-identical to the
+    per-class row_number window on both paths (driver sort, range-
+    partitioned dense ids), and the distributed form must have no
+    per-class single-task sort in its plan."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("class_uri").orderBy("instance_uri")
-    expect = {
-        (r["class_uri"], r["instance_uri"], r["instance_num"])
+    # obs' own pairs, and several classes with non-ASCII and astral-plane
+    # URIs: code-point order must equal Spark's UTF-8 byte order
+    names = ["i10", "i9", "Z", "a", "\u00e91", "\uff21", "\U0001f600", "\ud7ff"]
+    extra = spark.createDataFrame(
+        [(f"kg:C{k}", f"{n}{k}") for k in range(3) for n in names],
+        "class_uri string, instance_uri string",
+    )
+    for pairs in (obs.select("class_uri", "instance_uri"), extra):
+        expect = {
+            tuple(r)
+            for r in pairs.distinct().withColumn("instance_num", F.row_number().over(w)).collect()
+        }
+        for threshold in (100_000, 0):
+            nums = number_instances(pairs, driver_threshold=threshold)
+            assert {tuple(r) for r in nums.collect()} == expect, threshold
+    got = {
+        tuple(r)
+        for r in obs.select("class_uri", "instance_uri", "instance_num").distinct().collect()
+    }
+    assert got == {
+        tuple(r)
         for r in obs.select("class_uri", "instance_uri").distinct()
         .withColumn("instance_num", F.row_number().over(w)).collect()
     }
-    got = {
-        (r["class_uri"], r["instance_uri"], r["instance_num"])
-        for r in obs.select("class_uri", "instance_uri", "instance_num").distinct().collect()
-    }
-    assert got == expect
-    # the numbering plan must not window-partition by class_uri (one task
-    # per class); the scalable form windows by the range-partition id
-    plan = obs._jdf.queryExecution().executedPlan().toString()
+    # the distributed numbering plan must not window-partition by
+    # class_uri (one task per class); the scalable form windows by the
+    # range-partition id
+    plan = nums._jdf.queryExecution().executedPlan().toString()
     assert "windowspecdefinition(class_uri" not in plan
     assert "row_number" in plan  # the per-range-partition numbering window
 
@@ -144,10 +169,13 @@ def test_instance_numbering_matches_window_form(spark, obs):
 def test_dense_id_scalable_plan_build_is_lazy(spark):
     """Review r3: dense_id_scalable used to eager-checkpoint + collect at
     plan-BUILD time, running the whole upstream as a side effect of merely
-    composing the plan. Now zero jobs until an action. (extract_observations
-    as a whole stays eager by design — assign_subtrees is an iterative
-    fixpoint whose rounds are driver actions, and the parsed input and the
-    DFS output are materialized once; the numbering on top stays lazy.)"""
+    composing the plan. Now it runs no job beyond what a lazy checkpoint
+    of the range-partitioned keys runs by itself (the range sampler's
+    sketch and, under AQE, the upstream exchanges) until an action.
+    (extract_observations as a whole stays eager by
+    design — the subtree assignment and the numbering collect to the
+    driver or run fixpoint rounds, and the parsed input, the DFS output
+    and the numbered result are materialized once.)"""
     from rdf_i2b2_converter_spark.functions.ids import dense_id, dense_id_scalable
 
     df = spark.createDataFrame(
@@ -179,13 +207,53 @@ def test_dense_id_scalable_plan_build_is_lazy(spark):
 
 def test_assign_subtrees_raises_past_max_depth(spark):
     """A tree deeper than max_depth used to come back truncated without
-    error, dropping its deep part from the observations."""
+    error, dropping its deep part from the observations. Both paths: the
+    driver BFS and the distributed fixpoint (threshold 0)."""
     chain = _triples(spark, [(f"n{i}", "kg:next", f"n{i + 1}", None) for i in range(20)])
     roots = spark.createDataFrame([("n0", "kg:Chain")], "instance string, class_uri string")
-    with pytest.raises(ValueError, match="deeper than max_depth=16"):
-        assign_subtrees(chain, roots, max_depth=16)
-    got = {r["node"] for r in assign_subtrees(chain, roots, max_depth=32).collect()}
-    assert got == {f"n{i}" for i in range(21)}
+    for threshold in (100_000, 0):
+        with pytest.raises(ValueError, match="deeper than max_depth=16"):
+            assign_subtrees(chain, roots, max_depth=16, driver_threshold=threshold)
+        got = assign_subtrees(chain, roots, max_depth=32, driver_threshold=threshold)
+        assert {r["node"] for r in got.collect()} == {f"n{i}" for i in range(21)}
+    # exactly max_depth levels below the root still passes
+    assert assign_subtrees(chain, roots, max_depth=20).count() == 21
+
+
+def test_assign_subtrees_driver_matches_distributed(spark):
+    """The driver BFS returns the distributed fixpoint's row multiset:
+    shared context nodes, a cycle back to the root, an instance typed by
+    two entry classes ((root, root) once per roots row), and an output
+    over the cap with the links under it (falls through)."""
+    from rdf_i2b2_converter_spark.operators.rdfq import class_instances
+
+    g = _triples(spark, [
+        ("i1", "rdf:type", "kg:A", None),
+        ("i1", "rdf:type", "kg:B", None),
+        ("i1", "kg:hasSubject", "subj", None),
+        ("i1", "kg:has", "m1", None),
+        ("m1", "kg:next", "m2", None),
+        ("m2", "kg:next", "i1", None),          # cycle back to the root
+        ("m2", "kg:hasUnit", "u", None),
+        ("m1", "kg:hasUnit", "u", None),        # u reached twice
+        ("m1", "rdfs:label", "m one", None),    # not a link
+        ("m1", "kg:value", "3", "xsd:int"),     # not a link
+        ("i2", "rdf:type", "kg:A", None),
+        ("i2", "kg:hasSubject", "subj", None),  # shared context node
+        ("i2", "kg:has", "m2", None),
+        ("subj", "kg:hasIdentifier", "p1", "xsd:string"),
+        ("i3", "rdf:type", "kg:A", None),       # no links at all
+    ])
+    roots = class_instances(g, ["kg:A", "kg:B"])
+    want = Counter(tuple(r) for r in assign_subtrees(g, roots, driver_threshold=0).collect())
+    assert want[("i1", "i1")] == 2 and want[("i3", "i3")] == 1
+    assert want[("i1", "u")] == 1 and want[("i2", "subj")] == 1
+    driver = assign_subtrees(g, roots)
+    assert "LocalTableScan" in driver._jdf.queryExecution().executedPlan().toString()
+    n_links = 8
+    for threshold in (100_000, n_links):  # n_links: links fit, output does not
+        got = assign_subtrees(g, roots, driver_threshold=threshold)
+        assert Counter(tuple(r) for r in got.collect()) == want, threshold
 
 
 def test_parse_and_dfs_run_once(spark, obs_graph):
@@ -210,3 +278,62 @@ def test_parse_and_dfs_run_once(spark, obs_graph):
     assert seen.value == obs_graph.count()
     plan = obs._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan and "MapInPandas" not in plan
+
+
+def test_dfs_group_split_across_arrow_batches(spark, obs_graph, obs):
+    """The streamed DFS carries an instance group that straddles two Arrow
+    batches into the next batch: with 3 records per batch every instance
+    is split, and the rows equal the default-batch output."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        split = extract_observations(obs_graph, ["kg:Diagnosis"]).collect()
+    finally:
+        spark.conf.set(key, old)
+    assert Counter(tuple(r) for r in split) == Counter(tuple(r) for r in obs.collect())
+
+
+def test_first_wins_context_independent_of_partitioning(spark):
+    """overwrite=False ("first wins") used to take whichever row reached the
+    instance's group first, so an instance with two subjects got either
+    patient depending on row order and partition count. First is now the
+    sorted (s, p, o, o_datatype) order: subjA's patient in every layout."""
+    rows = [
+        ("i", "rdf:type", "kg:Diagnosis", None),
+        ("i", "kg:hasSubject", "subjA", None),
+        ("subjA", "rdf:type", "kg:SubjectPseudoIdentifier", None),
+        ("subjA", "kg:hasIdentifier", "pA", "xsd:string"),
+        ("i", "kg:hasSubject", "subjB", None),
+        ("subjB", "rdf:type", "kg:SubjectPseudoIdentifier", None),
+        ("subjB", "kg:hasIdentifier", "pB", "xsd:string"),
+        ("i", "kg:recordedAt", "2023-05-01 10:00:00", "xsd:dateTime"),
+    ]
+    schema = "s string, p string, o string, o_datatype string, o_lang string"
+    for order in (rows, rows[::-1]):
+        for n_parts in (1, 4):
+            rdd = spark.sparkContext.parallelize([(*r, None) for r in order], n_parts)
+            obs = extract_observations(spark.createDataFrame(rdd, schema), ["kg:Diagnosis"])
+            assert {r["patient_num"] for r in obs.collect()} == {"pA"}, (order[0], n_parts)
+
+
+def test_extract_and_reindex_job_budget(spark, obs_graph):
+    """Job count of the data flow (extract_observations, both reindex
+    calls, the three writes) on a small graph: the driver paths of the
+    subtree assignment and the numbering, and the numbered frame
+    materialized once, keep it at a fixed budget (61 jobs before them in
+    the benchmark's rdf_facts flow, 28 after)."""
+    from rdf_i2b2_converter_spark.operators.postprod import reindex
+
+    sc = spark.sparkContext
+    sc.setJobGroup("data-flow-budget", "extract + reindex + three writes")
+    try:
+        obs = extract_observations(obs_graph, ["kg:Diagnosis"])
+        obs, patient_map = reindex(obs, "patient_num")
+        obs, encounter_map = reindex(obs, "encounter_num")
+        for df in (patient_map, encounter_map, obs):
+            df.write.format("noop").mode("overwrite").save()
+        jobs = sc.statusTracker().getJobIdsForGroup("data-flow-budget")
+    finally:
+        sc.setJobGroup("", "")
+    assert len(jobs) <= JOB_BUDGET, f"{len(jobs)} jobs"
