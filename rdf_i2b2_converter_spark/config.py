@@ -96,3 +96,7 @@ TARGET_PARTITION_BYTES = 512 * 1024 * 1024
 
 #: Salt buckets for hot-key (head-entity) aggregations.
 DEFAULT_SALT_BUCKETS = 16
+
+#: Row cap of the driver paths (``operators/fixpoint.small_side``): inputs
+#: and results under it are built on the driver, larger ones distributed.
+DRIVER_THRESHOLD = 100_000

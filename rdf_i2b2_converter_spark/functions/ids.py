@@ -7,16 +7,18 @@ same ID across runs, partitionings and cluster sizes. That determinism is
 what makes the ontology<->fact join key work in the reference, and what
 makes our two-parallelism-level scaling run also a correctness check.
 
-All functions are pure Column expressions (JVM-side, whole-stage codegen);
-no Python executes per row.
+The ID and code functions are pure Column expressions (JVM-side,
+whole-stage codegen); the dense numberings return mapping DataFrames.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..config import MAX_BASECODE_LENGTH
+from ..config import DRIVER_THRESHOLD, MAX_BASECODE_LENGTH
+from ..operators.fixpoint import small_side
 
 #: Canonical key separator. '|' cannot appear in our canonical components
 #: (surfaces are tokenized alphanumerics, URIs use ':' '/').
@@ -68,26 +70,33 @@ def chained_code(parent_code: Column | None, uri: Column | str, cap: int = MAX_B
 
 
 def dense_id(df, key_cols: list[str], id_col: str = "dense_id"):
-    """Dense 1..N integer IDs over the distinct keys, deterministically ordered.
+    """Dense 1..N ``long`` IDs over the distinct keys, in key order.
 
     Analog of the awk first-seen counter reindex (src/scripts/postprod.bash:
     109-116,131-138) — but ordered by key, not encounter order, so the result
     is identical at any parallelism (SURVEY.md §7.4 #3). Returns a mapping
-    DataFrame (key_cols..., id_col) to be broadcast-joined back (C8).
+    DataFrame (key_cols..., id_col) to be joined back (C8).
 
-    Scale note: row_number over a global window single-tasks the mapping
-    build. That is fine when distinct keys << facts (patients vs
-    observations); for truly huge key sets use :func:`dense_id_scalable`.
-    """
-    from pyspark.sql import Window
+    Up to ``config.DRIVER_THRESHOLD`` distinct keys: the keys in Spark's
+    sort order, numbered on the driver (``fixpoint.small_side``; a local
+    relation, broadcast by its exact size). Above it:
+    :func:`dense_id_scalable`. Both forms give the same ids."""
+    keys = df.select(*key_cols).distinct().orderBy(*key_cols)
+    schema = T.StructType(
+        [df.schema[c] for c in key_cols] + [T.StructField(id_col, T.LongType(), False)]
+    )
 
-    w = Window.orderBy(*key_cols)
-    return df.select(*key_cols).distinct().withColumn(id_col, F.row_number().over(w))
+    def number(rows, _cap):
+        return [(*r, i) for i, r in enumerate(rows, 1)]
+
+    small = small_side([keys], DRIVER_THRESHOLD, number, schema)
+    return small if small is not None else dense_id_scalable(df, key_cols, id_col)
 
 
 def dense_id_scalable(df, key_cols: list[str], id_col: str = "dense_id", num_partitions: int | None = None):
     """Same contract as :func:`dense_id` (dense 1..N ids in global key
-    order, parallelism-independent) without the single-task global window:
+    order, parallelism-independent) for key sets too large for the
+    driver, without a single-task global window:
 
     1. range-partition the distinct keys (a sampled-boundary shuffle — the
        same mechanism as a distributed sort) and sort within partitions;
@@ -100,21 +109,17 @@ def dense_id_scalable(df, key_cols: list[str], id_col: str = "dense_id", num_par
        parallel.
 
     At 10^9+ distinct keys this is two shuffles of the key set and zero
-    serial stages, vs dense_id's one shuffle into ONE task. The result is
-    bit-identical to dense_id (asserted in tests): range partitions are
-    globally ordered, so offsets + local ranks compose to the global rank.
+    serial stages, vs a global row_number window's one shuffle into ONE
+    task. The result is bit-identical to that window (asserted in tests):
+    range partitions are globally ordered, so offsets + local ranks
+    compose to the global rank.
 
-    No collect at plan-build (review r3): the old form eagerly
-    materialized the checkpoint AND collected counts to the driver while
-    merely composing the plan. Now Spark's own RangePartitioner boundary
-    sketch runs at build (inherent to repartitionByRange — it samples when
-    the RDD is created), and under AQE the lazy checkpoint still runs the
-    upstream shuffle stages (the distinct) as jobs at the call; the
-    numbering itself waits for an action. The
-    localCheckpoint(eager=False) pins the sampled boundaries — both the
-    counts subtree and the probe subtree reference the SAME checkpointed
-    plan, so boundaries are drawn once and shared; without it the two
-    subtrees could re-sample differently and silently misnumber.
+    Plan build runs only what the lazy checkpoint of the range-partitioned
+    keys runs by itself: the RangePartitioner's boundary sketch and, under
+    AQE, the distinct's shuffle stage; the numbering waits for an action.
+    The checkpoint pins the sampled boundaries: the counts subtree and the
+    probe subtree read the same partitions, so they cannot re-sample
+    differently and silently misnumber.
     """
     from pyspark.sql import Window
 

@@ -18,10 +18,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_SALT_BUCKETS
-from ..schemas import COMPONENT_MAPPING, local_frame
+from ..schemas import COMPONENT_MAPPING
+from .fixpoint import small_side
 
 
-def _union_find_rows(pairs) -> list[tuple[str, str]]:
+def _union_find_rows(pairs, _cap: int) -> list[tuple[str, str]]:
     """Union-find with lexicographic-min roots over (u, v) pairs; returns
     the complete (id, component) mapping rows, self-loop endpoints
     included (find() registers both ends of every pair)."""
@@ -46,14 +47,6 @@ def _union_find_rows(pairs) -> list[tuple[str, str]]:
         m = min(members)
         rows.extend((n, m) for n in members)
     return rows
-
-
-def _driver_union_find(e: DataFrame) -> DataFrame:
-    """Collected union-find over an edge DataFrame; returned as a
-    (broadcastable, Arrow-built) mapping DataFrame. Only for sub-threshold
-    edge sets."""
-    rows = _union_find_rows((r["u"], r["v"]) for r in e.collect())
-    return local_frame(e.sparkSession, rows, COMPONENT_MAPPING)
 
 
 def _min_neighbor(e: DataFrame) -> DataFrame:
@@ -103,59 +96,30 @@ def connected_components(
     the lexicographically smallest member. Includes every endpoint
     (singletons in the edge set map to their component root or themselves).
 
-    Small graphs (< driver_threshold edges) run union-find on the driver —
-    the same small-side reasoning as a broadcast join (and as the
-    reference's in-memory awk lookup builds, postprod.bash:82-85): a dozen
-    driver-synchronous Spark rounds cost far more than collecting a few MB.
-    Large graphs run the distributed large-star/small-star loop.
+    Graphs whose raw edge rows and endpoints each fit under
+    ``2 * driver_threshold`` run union-find on the driver over one capped,
+    shuffle-free collect (``fixpoint.small_side``; cf. the reference's
+    in-memory awk lookups, postprod.bash:82-85): a dozen driver-synchronous
+    Spark rounds cost far more than collecting a few MB. Larger graphs run
+    the distributed large-star/small-star loop.
     """
-    # r6 fast path: ONE capped, shuffle-free collect of the raw edges.
-    # When it returns fewer rows than the cap we hold the WHOLE edge set,
-    # so the documented threshold criterion (symmetrized-distinct row
-    # count vs 2x driver_threshold) is evaluated exactly, in Python, and
-    # the sub-threshold case never launches a shuffle at all. A raw edge
-    # list bigger than the cap falls through to the Spark path below
-    # unchanged (the discarded head costs one bounded collect).
-    cap = 2 * driver_threshold + 1
-    head = (
-        edges.select(F.col("src_id").alias("u"), F.col("dst_id").alias("v"))
-        .limit(cap)
-        .collect()
-    )
-    if len(head) < cap:
-        sym = {(r["u"], r["v"]) for r in head} | {(r["v"], r["u"]) for r in head}
-        if len(sym) < 2 * driver_threshold:
-            rows = _union_find_rows(sorted(sym))
-            return local_frame(edges.sparkSession, rows, COMPONENT_MAPPING)
+    pairs = edges.select(F.col("src_id").alias("u"), F.col("dst_id").alias("v"))
+    small = small_side([pairs], 2 * driver_threshold, _union_find_rows, COMPONENT_MAPPING)
+    if small is not None:
+        return small
 
     # symmetrize WITH self-loops kept: a node whose only edges are
-    # self-loops must still appear in the mapping (review r5), and keeping
-    # the loop rows here lets the sub-threshold driver path derive EVERY
-    # endpoint from one collect instead of re-scanning the input for a
-    # distinct-nodes table and anti-joining it (r6: the old shape cost
-    # three extra Spark jobs per call). The star loop below still requires
-    # loop-free edges; they are filtered on that branch only.
+    # self-loops must still appear in the mapping (review r5): raw_nodes
+    # reads them from here; the star loop gets loop-free edges. Lazy:
+    # round 1 of the star loop materializes it
     e_all = (
-        edges.select(F.col("src_id").alias("u"), F.col("dst_id").alias("v"))
-        .unionByName(edges.select(F.col("dst_id").alias("u"), F.col("src_id").alias("v")))
+        pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
-        .localCheckpoint(eager=False)  # lazy: materialized by the count
+        .localCheckpoint(eager=False)
     )
-    n_edges = e_all.count()
-    if n_edges == 0:
-        return local_frame(edges.sparkSession, [], COMPONENT_MAPPING)
-    # e_all is SYMMETRIZED (both directions), so compare against 2x the
-    # documented per-input-edge threshold (review r5: the cutoff was
-    # silently half of what callers tuned; self-loop rows now count once —
-    # a path-choice detail only, both paths compute the same mapping)
-    if n_edges < 2 * driver_threshold:
-        # one cached-RDD collect; _driver_union_find registers self-loop
-        # endpoints via find(), so the mapping is complete without a
-        # separate singles pass
-        return _driver_union_find(e_all)
     raw_nodes = e_all.select(F.col("u").alias("id")).distinct()
-    # no second checkpoint: the filter reads the cached e_all partitions
-    # and round 1 of the star loop checkpoints its own output
+    # no second checkpoint: the filter reads the checkpointed e_all
+    # partitions and round 1 of the star loop checkpoints its own output
     e = e_all.filter(F.col("u") != F.col("v"))
 
     prev_sig = None
@@ -188,10 +152,8 @@ def connected_components(
     singles = raw_nodes.join(mapping.select("id"), "id", "left_anti").join(
         roots.select("id"), "id", "left_anti"
     ).select("id", F.col("id").alias("component"))
-    # the three branches are provably disjoint (mapping: id != component;
-    # roots: id == component; singles: anti-joined against both) and each
-    # internally distinct — a trailing .distinct() would be a redundant
-    # full shuffle of a potentially 10^9-row mapping (review r5)
+    # the three branches are disjoint (mapping: id != component; roots:
+    # id == component; singles: anti-joined against both): no .distinct()
     return mapping.unionByName(roots.distinct()).unionByName(singles)
 
 

@@ -24,27 +24,29 @@ then itself broadcast against mentions.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import schemas
-from ..config import BLACKLIST, MAX_BASECODE_LENGTH
+from ..config import BLACKLIST, DRIVER_THRESHOLD, MAX_BASECODE_LENGTH
 from ..functions.ids import chained_code
-from .fixpoint import expand
+from .fixpoint import expand, small_side
 
 #: rname (src/utils.py:130-132): strip the namespace prefix up to ':'.
 def _rname(col):
     return F.substring_index(col, ":", -1)
 
 
-def _driver_close(spark, rows, max_rounds: int, check_path_collisions: bool) -> DataFrame:
+def _driver_close(rows, cap: int, *, max_rounds: int, check_path_collisions: bool) -> list | None:
     """Driver-side BFS over a collected (sub-threshold) class-row list —
-    the same small-side reasoning as connected_components' union-find
-    path: a 3-5-level ontology costs ~10 driver-synchronous Spark jobs in
-    the distributed loop, versus one collect here. Semantics replicate the
+    a 3-5-level ontology costs ~10 driver-synchronous Spark jobs in the
+    distributed loop, versus one collect here. Semantics replicate the
     distributed branch EXACTLY, including the SQL null-equality of the
     muting join (NULL terminology matches nothing) and the per-ROW
-    multi-parent fan-out."""
+    multi-parent fan-out. ``None`` as soon as the closure passes ``cap``
+    rows: on a DAG it can outgrow its input many times over."""
     import hashlib
     from collections import defaultdict
 
@@ -113,6 +115,8 @@ def _driver_close(spark, rows, max_rounds: int, check_path_collisions: bool) -> 
             converged = True
             break
         result.extend(nxt)
+        if len(result) > cap:
+            return None
         frontier = nxt
     if not converged:
         raise ValueError(
@@ -132,14 +136,14 @@ def _driver_close(spark, rows, max_rounds: int, check_path_collisions: bool) -> 
                     "one parent) — the materialized-path key would silently "
                     "merge unrelated subtrees; rename or disambiguate"
                 )
-    return schemas.local_frame(spark, result, schemas.ONTOLOGY_CLOSED)
+    return result
 
 
 def close_ontology(
     ontology: DataFrame,
     max_rounds: int = 64,
     check_path_collisions: bool = True,
-    driver_threshold: int = 100_000,
+    driver_threshold: int = DRIVER_THRESHOLD,
 ) -> DataFrame:
     """ontology(class_uri, parent_uri, kind, ..., blacklisted) ->
     ONTOLOGY_CLOSED(class_uri, parent_uri, level, path, code, parent_code,
@@ -163,23 +167,24 @@ def close_ontology(
     paths — one cheap ontology-sized agg turns that silent key collision
     into an error (disable for trusted inputs).
 
-    ``driver_threshold``: ontologies whose class-row count fits under it
-    close on the driver via one capped collect + Python BFS (r6) — the
-    distributed fixpoint costs one driver-synchronous Spark job per level
-    plus setup joins, which dominates wall-clock for the common
-    10^2-10^5-node case; both paths produce identical rows (pytest-pinned)
-    and larger ontologies take the distributed loop unchanged.
+    ``driver_threshold``: ontologies whose class rows AND closed rows
+    fit under it close on the driver (``fixpoint.small_side``, a Python
+    BFS) — the distributed fixpoint costs a driver-synchronous Spark job
+    per level plus setup joins, which dominates the common 10^2-10^5-node
+    case. Both paths produce identical rows (pytest-pinned); the rest,
+    DAGs whose closure outgrows the cap included, take the loop.
     """
     classes = ontology.filter((F.col("kind") == "class") & (~F.col("blacklisted"))).filter(
         ~F.col("class_uri").isin(list(BLACKLIST))
     )
-    head = (
-        classes.select("class_uri", "parent_uri", "kind", "terminology")
-        .limit(driver_threshold + 1)
-        .collect()
+    closed = small_side(
+        [classes.select("class_uri", "parent_uri", "kind", "terminology")],
+        driver_threshold,
+        partial(_driver_close, max_rounds=max_rounds, check_path_collisions=check_path_collisions),
+        schemas.ONTOLOGY_CLOSED,
     )
-    if len(head) <= driver_threshold:
-        return _driver_close(ontology.sparkSession, head, max_rounds, check_path_collisions)
+    if closed is not None:
+        return closed
 
     # stop_expansion: computed once, joined onto every frontier.
     same_term_children = (

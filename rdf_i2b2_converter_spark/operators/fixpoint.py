@@ -1,12 +1,39 @@
-"""The one accumulate-until-empty loop behind every distributed closure:
-Spark has no recursive CTE, so a closure runs as rounds of joins driven
-from the Python driver."""
+"""The two mechanisms behind the closures, lookups and numberings that the
+reference builds in memory (awk lookups, rdflib tree walks): ``small_side``,
+the driver path taken when the inputs and the result fit under a row cap,
+and ``expand``, the one accumulate-until-empty loop of the distributed
+forms (Spark has no recursive CTE, so a closure runs as rounds of joins
+driven from the Python driver)."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
+
+from ..schemas import local_frame
+
+
+def small_side(
+    inputs: Sequence[DataFrame], cap: int, build: Callable[..., list | None], schema: T.StructType
+) -> DataFrame | None:
+    """The driver path: ``build(*rows, cap)`` over one ``limit(cap + 1)
+    .collect()`` per input, as a ``schemas.local_frame`` (a local relation:
+    no job, no Python worker). The first input over ``cap`` rows stops the
+    collects; ``build`` may give up by returning ``None`` (say, once its
+    output passes ``cap``); an output over ``cap`` rows is discarded.
+    ``None`` means "too big for the driver": run the distributed form."""
+    rows = []
+    for df in inputs:
+        head = df.limit(cap + 1).collect()
+        if len(head) > cap:
+            return None
+        rows.append(head)
+    out = build(*rows, cap)
+    if out is None or len(out) > cap:
+        return None
+    return local_frame(inputs[0].sparkSession, out, schema)
 
 
 def expand(

@@ -3,7 +3,10 @@
 src/scripts/postprod.bash is, operator for operator, a broadcast-hash-join
 pipeline written in awk (SURVEY.md §3 entry point 3). Each function here is
 the Spark form; together with functions/ids.dense_id they replace the whole
-bash stage with ~6 Catalyst-fused DataFrame operations.
+bash stage with ~6 Catalyst-fused DataFrame operations. The awk scripts
+hold their lookups in memory; the small ones here do too, as driver-built
+local relations (``fixpoint.small_side``), and the large ones run
+distributed.
 """
 
 from __future__ import annotations
@@ -23,34 +26,19 @@ def dedup_first(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFram
     return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
-def reindex(
-    fact: DataFrame, id_col: str, new_col: str | None = None, scalable: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """Dense integer reindex of an identifier column (reindex_encounters /
+def reindex(fact: DataFrame, id_col: str, new_col: str | None = None) -> tuple[DataFrame, DataFrame]:
+    """Dense ``long`` reindex of an identifier column (reindex_encounters /
     reindex_patients, src/scripts/postprod.bash:109-149, operators E2+C8):
-    returns (rewritten fact, mapping table).
+    returns (rewritten fact, mapping table); a NULL id becomes -1.
 
-    ``scalable=False`` (default): mapping via the single-task global
-    window (functions/ids.dense_id) and a broadcast join back — right when
-    distinct keys << facts (patients vs observations). ``scalable=True``:
-    range-partitioned per-partition-offset numbering
-    (functions/ids.dense_id_scalable, same values bit-for-bit) and a
-    SHUFFLE join back — right when the key set itself is huge (billions of
-    patients: neither a one-task window nor a broadcast fits)."""
-    from ..functions.ids import dense_id_scalable
-
+    The mapping is :func:`functions.ids.dense_id`: up to
+    ``config.DRIVER_THRESHOLD`` keys a driver-built local relation (the
+    awk in-memory lookup), broadcast by its exact size and never
+    recomputed; above it the range-partitioned numbering, joined back as
+    AQE decides."""
     new_col = new_col or id_col
-    if scalable:
-        mapping = dense_id_scalable(fact, [id_col], "new_id")
-        joined = fact.join(mapping, id_col, "left")
-    else:
-        # computed once: the mapping write and every action on the
-        # rewritten fact read the same numbering instead of re-running
-        # the single-task window (under AQE the checkpoint runs the
-        # mapping's shuffle stages here, at the call)
-        mapping = dense_id(fact, [id_col], "new_id").localCheckpoint(eager=False)
-        joined = fact.join(F.broadcast(mapping), id_col, "left")
-    rewritten = joined.withColumn(
+    mapping = dense_id(fact, [id_col], "new_id")
+    rewritten = fact.join(mapping, id_col, "left").withColumn(
         new_col, F.coalesce(F.col("new_id"), F.lit(-1))
     ).drop("new_id")
     return rewritten, mapping

@@ -13,22 +13,22 @@ over the triples DataFrame:
    its own tree");
 3. one streamed Python pass running the instance-local DFS
    (explore_obstree:236-293): the tagged triples are hash-partitioned by
-   root and sorted, and ``mapInArrow`` cuts the stream into instance
-   groups: hash-chained basecodes (G6), context capture with the
-   overwrite policy (ContextFactory.digest:320-352), path-end detection
-   (is_pathend:208-234, G8), value dispatch on literal ends
+   root and sorted, and ``mapInArrow`` cuts the stream into one group per
+   (instance, entry class): hash-chained basecodes (G6), context capture
+   with the overwrite policy (ContextFactory.digest:320-352), path-end
+   detection (is_pathend:208-234, G8), value dispatch on literal ends
    (ObservationRegister.digest:142-170 with COLUMNS_MAPPING.VALUE),
    mandatory-context gate (B7);
-4. instance numbering per entry class (E1): a driver-side sort of the
-   distinct (class, instance) pairs under ``driver_threshold``, otherwise
-   range-partitioned dense ids.
+4. instance numbering per entry class (E1): the sorted distinct (class,
+   instance) pairs numbered on the driver under ``driver_threshold``,
+   otherwise range-partitioned dense ids.
 
 Instance trees are small and independent — the per-group Python DFS is the
 reference algorithm verbatim over a few dozen rows, Arrow-batched. The
-driver paths exist because a small instance graph is bound by job
-latency: every fixpoint round and every numbering stage is a Spark job,
-where one capped collect does the same work. Each path is chosen from the
-observed input size, and the distributed forms stay for large graphs.
+driver paths (``fixpoint.small_side``) exist because a small instance
+graph is bound by job latency: every fixpoint round and every numbering
+stage is a Spark job, where one capped collect does the same work. The
+distributed forms stay for large graphs.
 
 Three frames are materialized once with ``localCheckpoint()``: the parsed
 input (projected to ``s, p, o, o_datatype``), the DFS output and the
@@ -43,6 +43,9 @@ from __future__ import annotations
 
 import hashlib
 from collections import defaultdict
+from functools import partial
+from itertools import groupby
+from operator import itemgetter
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
@@ -50,11 +53,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..config import MAX_BASECODE_LENGTH, VALUE_DISPATCH
+from ..config import DRIVER_THRESHOLD, MAX_BASECODE_LENGTH, VALUE_DISPATCH
 from ..functions.ids import dense_id_scalable
-from ..operators.fixpoint import expand
+from ..operators.fixpoint import expand, small_side
 from ..operators.rdfq import RDF_TYPE, class_instances
-from ..schemas import local_frame
 
 RDFS_LABEL = "rdfs:label"
 
@@ -102,19 +104,18 @@ def reduce_basecode(uri: str, prefix: str, cap: int = MAX_BASECODE_LENGTH) -> st
 
 
 def _driver_subtrees(
-    links: list, roots: list, max_depth: int, max_rows: int, error: str
+    links: list, roots: list, max_rows: int, *, max_depth: int, error: str
 ) -> list[tuple[str, str]] | None:
-    """Per-root BFS over collected ``(node, child)`` links with the same
-    rows as the distributed branch: ``(root, root)`` once per roots row,
-    every other reachable node once per distinct root. ``None`` when the
-    result would exceed ``max_rows``."""
+    """Per-root BFS over collected ``(node, child)`` links and
+    ``(instance,)`` roots with the distributed branch's rows: ``(root,
+    root)`` once per roots row, every other reachable node once per
+    distinct root. ``None`` when the result would exceed ``max_rows``."""
     children: dict[str, list[str]] = defaultdict(list)
     for node, child in links:
         children[node].append(child)
-    out = [(r, r) for r in roots]
-    if len(out) > max_rows:
-        return None
-    for root in dict.fromkeys(roots):
+    heads = [r for r, in roots]
+    out = [(r, r) for r in heads]
+    for root in dict.fromkeys(heads):
         seen, frontier = {root}, [root]
         for depth in range(max_depth + 1):
             nxt = []
@@ -135,18 +136,18 @@ def _driver_subtrees(
 
 
 def assign_subtrees(
-    triples: DataFrame, roots: DataFrame, max_depth: int = 16, driver_threshold: int = 100_000
+    triples: DataFrame, roots: DataFrame, max_depth: int = 16, driver_threshold: int = DRIVER_THRESHOLD
 ) -> DataFrame:
     """roots(instance, class_uri) -> (root, node): every resource node
     reachable from an entry instance via object links (instance trees are
     shallow — the reference recursion depth is bounded by the ontology's
     property nesting).
 
-    ``driver_threshold``: when the distinct object links and the result
-    both fit under it, one capped collect of the links and a per-root
-    Python BFS replace the distributed branch, a bounded-depth iterative
-    broadcast join on ``fixpoint.expand`` that costs a few Spark jobs per
-    depth level. Both paths produce the same rows (pytest-pinned).
+    ``driver_threshold``: when the distinct object links, the roots and
+    the result all fit under it, a per-root Python BFS
+    (``fixpoint.small_side``) replaces the distributed branch, a
+    bounded-depth broadcast join on ``fixpoint.expand`` that costs a few
+    Spark jobs per depth level. Both produce the same rows (pytest-pinned).
 
     Raises ``ValueError`` when a node lies deeper than ``max_depth`` links
     below its root: returning the truncated subtree would silently drop
@@ -160,13 +161,10 @@ def assign_subtrees(
         f"assign_subtrees: an instance tree is deeper than max_depth={max_depth} "
         "links; raise max_depth or check the instance graph"
     )
-    links = edges.limit(driver_threshold + 1).collect()
-    if len(links) <= driver_threshold:
-        # every roots row is an output row, so the output cap bounds this collect
-        heads = [r[0] for r in roots.select("instance").limit(driver_threshold + 1).collect()]
-        rows = _driver_subtrees(links, heads, max_depth, driver_threshold, error)
-        if rows is not None:
-            return local_frame(triples.sparkSession, rows, _SUBTREE)
+    build = partial(_driver_subtrees, max_depth=max_depth, error=error)
+    small = small_side([edges, roots.select("instance")], driver_threshold, build, _SUBTREE)
+    if small is not None:
+        return small
     # round k finds the nodes k links below their root; the round past
     # max_depth must come back empty
     return expand(
@@ -182,13 +180,13 @@ def assign_subtrees(
     )
 
 
-def number_instances(obs: DataFrame, driver_threshold: int = 100_000) -> DataFrame:
+def number_instances(obs: DataFrame, driver_threshold: int = DRIVER_THRESHOLD) -> DataFrame:
     """E1: ``(class_uri, instance_uri, instance_num)``, instances numbered
     1..n within each entry class in ``instance_uri`` order.
 
-    Under ``driver_threshold`` distinct pairs: one capped collect, sorted
-    in Python — code-point order equals Spark's UTF-8 byte order for
-    strings. Above it: a per-class row_number window would sort each class
+    Under ``driver_threshold`` distinct pairs (``fixpoint.small_side``):
+    one capped collect of the pairs sorted by Spark, numbered on the
+    driver. Above it: a per-class row_number window would sort each class
     in ONE task — with a handful of entry classes and 10^9 instances per
     class that's a serial stage. Instead: range-partitioned global dense
     ids over (class, instance) order (functions/ids.dense_id_scalable —
@@ -197,14 +195,18 @@ def number_instances(obs: DataFrame, driver_threshold: int = 100_000) -> DataFra
     range partitions are globally ordered. Both forms are bit-identical to
     the window form (asserted in tests/test_data_pipeline.py)."""
     pairs = obs.select("class_uri", "instance_uri")
-    head = pairs.distinct().limit(driver_threshold + 1).collect()
-    if len(head) <= driver_threshold:
-        rows, last, n = [], None, 0
-        for class_uri, instance_uri in sorted(map(tuple, head)):
-            n = n + 1 if class_uri == last else 1
-            last = class_uri
-            rows.append((class_uri, instance_uri, n))
-        return local_frame(obs.sparkSession, rows, _INSTANCE_NUMS)
+    small = small_side(
+        [pairs.distinct().orderBy("class_uri", "instance_uri")],
+        driver_threshold,
+        lambda rows, _cap: [
+            (c, i, n)
+            for c, group in groupby(rows, key=itemgetter(0))
+            for n, (_, i) in enumerate(group, 1)
+        ],
+        _INSTANCE_NUMS,
+    )
+    if small is not None:
+        return small
     gids = dense_id_scalable(pairs, ["class_uri", "instance_uri"], id_col="__gid")
     class_start = gids.groupBy("class_uri").agg(F.min("__gid").alias("__cmin"))
     return (
@@ -225,6 +227,9 @@ def extract_observations(
     inherited context and chained basecodes. Output numbered per class
     (E1) and gated on mandatory context (B7).
 
+    An instance typed by several entry classes yields one set of rows
+    per class, numbered within each class.
+
     Eager: the subtree assignment and the numbering collect to the driver
     (or, past ``driver_threshold``, run driver-synchronous fixpoint rounds
     and a range sampler), and three frames are materialized with
@@ -242,8 +247,9 @@ def extract_observations(
     triples = triples.select("s", "p", "o", "o_datatype").localCheckpoint()
 
     roots = class_instances(triples, entry_classes)
-    subtree = assign_subtrees(triples, roots, max_depth)
-    # every triple of every subtree node, tagged with its root
+    # one subtree per instance, however many entry classes type it
+    subtree = assign_subtrees(triples, roots.select("instance").distinct(), max_depth)
+    # every triple of every subtree node, tagged with its root and class
     tagged = subtree.join(triples, subtree.node == triples.s).select(
         "root", "s", "p", "o", "o_datatype"
     )
@@ -256,7 +262,8 @@ def extract_observations(
     )
 
     def run_group(root: str, class_uri: str, rows: list[tuple]) -> list[dict]:
-        """One instance's DFS over its ``(s, p, o, o_datatype)`` rows."""
+        """One instance's DFS, under one of its entry classes, over its
+        ``(s, p, o, o_datatype)`` rows."""
         cfg = bc_ctx.value
         ctx_map, terms, value_map = cfg["ctx"], cfg["terms"], cfg["values"]
         # adjacency: subject -> [(pred, obj, datatype)]
@@ -266,6 +273,7 @@ def extract_observations(
             if p == RDF_TYPE and dt is None:
                 types[s] = o
             adj.setdefault(s, []).append((p, o, dt))
+        types[root] = class_uri  # the concept code is the group's class
 
         out_rows: list[dict] = []
 
@@ -382,8 +390,8 @@ def extract_observations(
         return out_rows
 
     def run_partition(batches):
-        """Cut the root-sorted stream into instance groups. A group that
-        straddles two Arrow batches is carried into the next one, so
+        """Cut the sorted stream into (root, class_uri) groups. A group
+        that straddles two Arrow batches is carried into the next one, so
         memory holds one group and one batch's output."""
         group, rows = None, []
         for batch in batches:
@@ -392,7 +400,7 @@ def extract_observations(
             for root, class_uri, *row in zip(
                 c["root"], c["class_uri"], c["s"], c["p"], c["o"], c["o_datatype"]
             ):
-                if group is None or root != group[0]:
+                if (root, class_uri) != group:
                     if rows:
                         out += run_group(*group, rows)
                     group, rows = (root, class_uri), []
@@ -403,8 +411,7 @@ def extract_observations(
             yield pa.RecordBatch.from_pylist(run_group(*group, rows), schema=obs_arrow)
 
     # read by the numbering and the final join. Sorting within the group
-    # (class_uri first, so a group's class is its smallest one) makes the
-    # DFS independent of the partitioning
+    # makes the DFS independent of the partitioning
     obs_arrow = to_arrow_schema(T.StructType.fromDDL(OBS_SCHEMA))
     obs = (
         tagged.repartition("root")

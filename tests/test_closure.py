@@ -208,3 +208,27 @@ def test_driver_close_frame_uses_no_python_worker(spark, corpus):
     closed = close_ontology(corpus["ontology"])  # below driver_threshold
     assert "PythonRDD" not in closed._jdf.queryExecution().toRdd().toDebugString()
     assert closed.schema == schemas.ONTOLOGY_CLOSED
+
+
+def test_driver_close_declines_a_closure_over_the_cap(spark):
+    """The driver BFS bounds its output as well as its input: a chain of
+    diamonds has few class rows but doubles its paths at every diamond, so
+    its closure outgrows a cap its class rows fit under. That closure
+    takes the distributed loop, with the same rows."""
+    from rdf_i2b2_converter_spark import schemas
+
+    rows, top = [("r", None, "class", "R", None, None, False)], "r"
+    for i in range(5):  # r -> {a_i, b_i} -> c_i -> {a_i+1, b_i+1} ...
+        rows += [(f"a{i}", top, "class", "A", None, None, False),
+                 (f"b{i}", top, "class", "B", None, None, False),
+                 (f"c{i}", f"a{i}", "class", "C", None, None, False),
+                 (f"c{i}", f"b{i}", "class", "C", None, None, False)]
+        top = f"c{i}"
+    onto = spark.createDataFrame(rows, schema=schemas.ONTOLOGY)
+    cap = len(rows)  # 21 class rows fit; the closure has 125 rows
+    capped = close_ontology(onto, driver_threshold=cap)
+    want = sorted(tuple(r) for r in close_ontology(onto, driver_threshold=0).collect())
+    assert len(want) > cap
+    assert sorted(tuple(r) for r in capped.collect()) == want
+    plan = capped._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" not in plan, plan

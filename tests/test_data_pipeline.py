@@ -135,7 +135,7 @@ def test_instance_numbering_matches_window_form(spark, obs):
 
     w = Window.partitionBy("class_uri").orderBy("instance_uri")
     # obs' own pairs, and several classes with non-ASCII and astral-plane
-    # URIs: code-point order must equal Spark's UTF-8 byte order
+    # URIs
     names = ["i10", "i9", "Z", "a", "\u00e91", "\uff21", "\U0001f600", "\ud7ff"]
     extra = spark.createDataFrame(
         [(f"kg:C{k}", f"{n}{k}") for k in range(3) for n in names],
@@ -176,7 +176,9 @@ def test_dense_id_scalable_plan_build_is_lazy(spark):
     design — the subtree assignment and the numbering collect to the
     driver or run fixpoint rounds, and the parsed input, the DFS output
     and the numbered result are materialized once.)"""
-    from rdf_i2b2_converter_spark.functions.ids import dense_id, dense_id_scalable
+    from pyspark.sql import Window
+
+    from rdf_i2b2_converter_spark.functions.ids import dense_id_scalable
 
     df = spark.createDataFrame(
         [(f"c{i % 3}", f"i{i}") for i in range(50)], "class_uri string, instance_uri string"
@@ -200,8 +202,9 @@ def test_dense_id_scalable_plan_build_is_lazy(spark):
     finally:
         sc.setJobGroup("", "")
     # and the lazy form still numbers bit-identically to the window form
+    w = Window.orderBy("class_uri", "instance_uri")
     got = {tuple(r) for r in ids.collect()}
-    want = {tuple(r) for r in dense_id(df, ["class_uri", "instance_uri"], "dense_id").collect()}
+    want = {tuple(r) for r in df.distinct().withColumn("n", F.row_number().over(w)).collect()}
     assert got == want
 
 
@@ -254,6 +257,32 @@ def test_assign_subtrees_driver_matches_distributed(spark):
     for threshold in (100_000, n_links):  # n_links: links fit, output does not
         got = assign_subtrees(g, roots, driver_threshold=threshold)
         assert Counter(tuple(r) for r in got.collect()) == want, threshold
+
+
+def test_instance_of_two_entry_classes_counts_once_in_each(spark):
+    """An instance typed by two entry classes is walked once under each:
+    one concept row and one value row per class, numbered 1 in each, with
+    the class's own concept code."""
+    g = _triples(spark, [
+        ("i", "rdf:type", "kg:A", None),
+        ("i", "rdf:type", "kg:B", None),
+        ("i", "kg:hasSubject", "subj", None),
+        ("subj", "rdf:type", "kg:SubjectPseudoIdentifier", None),
+        ("subj", "kg:hasIdentifier", "p1", "xsd:string"),
+        ("i", "kg:score", "0.5", "xsd:double"),
+    ])
+    rows = extract_observations(g, ["kg:A", "kg:B"]).collect()
+    for cls in ("kg:A", "kg:B"):
+        code = reduce_basecode(cls, "")
+        mine = sorted(
+            (r["modifier_cd"], r["concept_cd"], r["instance_num"], r["nval_num"], r["patient_num"])
+            for r in rows if r["class_uri"] == cls
+        )
+        assert mine == sorted([
+            ("@", code, 1, None, "p1"),
+            (reduce_basecode("kg:score", code), code, 1, 0.5, "p1"),
+        ]), cls
+    assert len(rows) == 4
 
 
 def test_parse_and_dfs_run_once(spark, obs_graph):

@@ -42,22 +42,48 @@ def test_dense_id_is_dense_and_deterministic(spark):
     assert m == {10: 1, 20: 2, 30: 3}
 
 
-def test_dense_id_scalable_matches_window_variant(spark):
-    """dense_id_scalable (range-partition + per-partition offsets, no
-    single-task global window) must produce the SAME dense numbering as
-    dense_id, at any partitioning."""
-    from pyspark.sql import functions as F
+def _window_ids(df, key_cols, id_col):
+    """Reference numbering: the single-task global row_number window."""
+    from pyspark.sql import Window
 
-    from rdf_i2b2_converter_spark.functions.ids import dense_id, dense_id_scalable
+    w = Window.orderBy(*key_cols)
+    return df.select(*key_cols).distinct().select(
+        *key_cols, F.row_number().over(w).cast("long").alias(id_col)
+    )
+
+
+def test_dense_id_scalable_matches_window_variant(spark):
+    """dense_id (driver-built under the cap) and dense_id_scalable
+    (range-partition + per-partition offsets, no single-task global
+    window) must produce the SAME dense numbering as a global row_number
+    window, at any partitioning."""
+    from rdf_i2b2_converter_spark.functions.ids import dense_id_scalable
 
     # duplicate keys + skewed distribution + multiple input partitions
     rows = [(f"p{i % 137:03d}", i % 7) for i in range(2000)]
     df = spark.createDataFrame(rows, "patient string, site int").repartition(16)
 
-    a = dense_id(df, ["patient", "site"], "n").select(
-        "patient", "site", F.col("n").cast("long").alias("n")
-    )
+    a = _window_ids(df, ["patient", "site"], "n")
+    d = dense_id(df, ["patient", "site"], "n")
+    assert a.exceptAll(d).count() == 0 and d.exceptAll(a).count() == 0
     for n_parts in (1, 3, 32):
         b = dense_id_scalable(df, ["patient", "site"], "n", num_partitions=n_parts)
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, n_parts
         assert b.count() == a.count()
+
+
+def test_dense_id_takes_the_range_form_past_the_cap(spark, monkeypatch):
+    """Past config.DRIVER_THRESHOLD distinct keys dense_id is the
+    range-partitioned form: same ids and ``long`` type, no local
+    relation. Under it, a local relation."""
+    from rdf_i2b2_converter_spark.functions import ids
+
+    df = spark.createDataFrame([(k,) for k in "qbzbaq"], "k string")
+    want = {("a", 1), ("b", 2), ("q", 3), ("z", 4)}
+    for cap, local in ((4, True), (3, False)):
+        monkeypatch.setattr(ids, "DRIVER_THRESHOLD", cap)
+        m = dense_id(df, ["k"])
+        plan = m._jdf.queryExecution().executedPlan().toString()
+        assert ("LocalTableScan" in plan) == local, (cap, plan)
+        assert dict(m.dtypes)["dense_id"] == "bigint"
+        assert {tuple(r) for r in m.collect()} == want

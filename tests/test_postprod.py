@@ -2,8 +2,7 @@
 (inner vs left), dedup-first, anti-join check — semantics pinned to
 src/scripts/postprod.bash (SURVEY.md §3 entry point 3)."""
 
-from pyspark.sql import functions as F
-
+from rdf_i2b2_converter_spark.functions import ids
 from rdf_i2b2_converter_spark.operators.postprod import (
     anti_join_check,
     dedup_first,
@@ -13,6 +12,10 @@ from rdf_i2b2_converter_spark.operators.postprod import (
     replace_codes_left,
     row_ids,
 )
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_reindex_dense_and_mapped(spark):
@@ -25,13 +28,12 @@ def test_reindex_dense_and_mapped(spark):
 
 
 def test_reindex_mapping_computed_once(spark, tmp_path):
-    """The broadcast branch materializes its mapping: once the mapping is
-    written, the rewritten fact reads it back instead of re-running the
-    single-task numbering window."""
+    """A small mapping is built once, on the driver: writing it and
+    reading the rewritten fact run no numbering window."""
     fact = spark.createDataFrame([("p9", 1), ("p2", 2), ("p9", 3)], "pid string, v int")
     rewritten, mapping = reindex(fact, "pid", "pnum")
     mapping.write.parquet(str(tmp_path / "mapping"))
-    plan = rewritten._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(rewritten)
     assert "Window" not in plan, plan
     assert {(r["v"], r["pnum"]) for r in rewritten.collect()} == {(1, 2), (2, 1), (3, 2)}
 
@@ -80,19 +82,31 @@ def test_anti_join_check(spark):
     assert [r["code"] for r in bad] == ["c2"]
 
 
-def test_reindex_scalable_matches_default(spark):
-    """scalable=True (range-partitioned numbering + shuffle join) must
-    produce the same rewritten fact as the broadcast-window default."""
-    from pyspark.sql import functions as F
-
-    from rdf_i2b2_converter_spark.operators.postprod import reindex
-
+def test_reindex_scalable_matches_default(spark, monkeypatch):
+    """Past the driver cap, reindex numbers with the range-partitioned
+    functions/ids.dense_id_scalable; it rewrites the fact exactly as the
+    driver-built mapping does."""
     fact = spark.createDataFrame(
         [(f"enc{i % 43:02d}", i) for i in range(500)], "encounter string, row int"
     ).repartition(8)
     a, ma = reindex(fact, "encounter", "enc_num")
-    b, mb = reindex(fact, "encounter", "enc_num", scalable=True)
-    an = a.select("row", F.col("enc_num").cast("long").alias("n"))
-    bn = b.select("row", F.col("enc_num").cast("long").alias("n"))
+    monkeypatch.setattr(ids, "DRIVER_THRESHOLD", 0)
+    b, mb = reindex(fact, "encounter", "enc_num")
+    assert "LocalTableScan" in _plan(ma) and "LocalTableScan" not in _plan(mb)
+    an, bn = a.select("row", "enc_num"), b.select("row", "enc_num")
     assert an.exceptAll(bn).count() == 0 and bn.exceptAll(an).count() == 0
     assert ma.count() == mb.count() == 43
+
+
+def test_reindex_ids_are_long_on_both_numbering_forms(spark, monkeypatch):
+    """The mapping's new_id and the rewritten column are ``long`` on the
+    driver form and the range form alike (the PATIENT_MAPPING /
+    ENCOUNTER_MAPPING type)."""
+    fact = spark.createDataFrame([("p9", 1), ("p2", 2), (None, 3)], "pid string, v int")
+    for form in ("driver", "range"):
+        if form == "range":
+            monkeypatch.setattr(ids, "DRIVER_THRESHOLD", 0)
+        rewritten, mapping = reindex(fact, "pid", "pnum")
+        assert dict(mapping.dtypes)["new_id"] == "bigint", form
+        assert dict(rewritten.dtypes)["pnum"] == "bigint", form
+        assert {(r["v"], r["pnum"]) for r in rewritten.collect()} == {(1, 3), (2, 2), (3, -1)}
