@@ -80,24 +80,19 @@ def cmd_data(args) -> int:
     # guess_format analog (reference src/utils.py:48-75): an explicit
     # --format always wins; 'auto' dispatches on the file extension
     # (compression suffixes stripped, matching read_rdf)
-    from .sources.rdf import (
-        _should_respread,
-        strip_compression_suffix,
-        turtle_doc_chunk_bytes,
-    )
+    from .sources.rdf import strip_compression_suffix, turtle_doc_chunk_bytes
 
     fmt = None if args.format == "auto" else args.format
     base, _ = strip_compression_suffix(args.triples)
     if fmt in ("turtle", "turtle-lines") or (fmt is None and base.endswith(".ttl")):
         # compact pnames: entry classes in configs use the p:local form;
-        # giant-file auto-chunk + unsplittable-codec respread apply exactly
-        # as in read_rdf (shared policy helpers)
+        # the giant-file auto-chunk applies exactly as in read_rdf (shared
+        # policy helper), and line mode respreads compressed input itself
         lines_mode = fmt == "turtle-lines"
         triples = read_turtle(
             spark, args.triples, expand_prefixes=False,
             multiline=not lines_mode,
             chunk_bytes=None if lines_mode else turtle_doc_chunk_bytes(spark, args.triples),
-            respread=lines_mode and _should_respread(spark, args.triples),
         )
     else:
         triples = read_rdf(spark, args.triples, fmt)

@@ -57,46 +57,21 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 def minhash_signature(
-    df: DataFrame, text_col: str = "text", k: int = 3, n_hashes: int = 16,
-    scheme: str = "km",
+    df: DataFrame, text_col: str = "text", k: int = 3, n_hashes: int = 16
 ) -> DataFrame:
     """n_hashes-permutation MinHash over k-token shingles. Array expressions
     only; no UDF, no explode — the signature computes map-side with zero
-    shuffle. Both schemes are DuckDB-oracle-reproducible bit-for-bit.
+    shuffle, DuckDB-oracle-reproducible bit-for-bit.
 
-    ``scheme='km'`` (default): ONE md5 per shingle, split into two 52-bit
-    halves (h1, h2), permutation i = h1 + (i+1)*(2*h2+1) — Kirsch-
-    Mitzenmacher double hashing, the standard trick for deriving a hash
-    family from one base hash. n_hashes md5 calls per shingle collapse to
-    one; 52-bit halves keep (i+1)*h2' + h1 < 2^63 for n_hashes <= 512 (no
-    ANSI overflow). Adds ``minhash: array<long>``.
-
-    ``scheme='md5'``: permutation i is md5(shingle || '#' || i) — the
-    original n-independent-hashes form, kept for corpora already
-    fingerprinted with it. Adds ``minhash: array<string>``."""
+    ONE md5 per shingle, split into two 52-bit halves (h1, h2), permutation
+    i = h1 + (i+1)*(2*h2+1) — Kirsch-Mitzenmacher double hashing, the
+    standard trick for deriving a hash family from one base hash. n_hashes
+    md5 calls per shingle collapse to one; 52-bit halves keep
+    (i+1)*h2' + h1 < 2^63 for n_hashes <= 512 (no ANSI overflow). Adds
+    ``minhash: array<long>``."""
     sh = shingles(F.col(text_col), k)
-    if scheme == "md5":
-        # bind the shingle array as a REAL column first — n_hashes sibling
-        # array_min(transform(..)) expressions would otherwise each
-        # re-evaluate the whole tokenize+shingle HOF chain (review r5: the
-        # same re-evaluation trap the km branch below documents and fixes)
-        sig = F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        F.col("__mh_sh"), lambda s: F.md5(F.concat(s, F.lit(f"#{i}")))
-                    )
-                )
-                for i in range(n_hashes)
-            ]
-        )
-        return (
-            df.withColumn("__mh_sh", sh).withColumn("minhash", sig).drop("__mh_sh")
-        )
-    if scheme != "km":
-        raise ValueError(f"unknown minhash scheme {scheme!r} (use 'km' or 'md5')")
     if n_hashes > 512:
-        raise ValueError("km scheme supports n_hashes <= 512 (64-bit headroom)")
+        raise ValueError("minhash_signature supports n_hashes <= 512 (64-bit headroom)")
     # the md5s and the (h1, h2') pairs are bound as REAL columns in child
     # projections so the md5 runs ONCE per shingle — n_hashes sibling
     # array_min(transform(..)) expressions would otherwise each re-evaluate
@@ -136,7 +111,6 @@ def lsh_candidate_pairs(
     n_bands: int = 4,
     max_bucket_size: int | None = 1000,
     log_clips: bool = False,
-    scheme: str = "km",
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates: band the signature, self-join on
     (band_id, band_hash) buckets, emit id pairs (a < b).
@@ -179,7 +153,7 @@ def lsh_candidate_pairs(
             "(rows_per_band = n_hashes / n_bands)"
         )
     rows_per_band = n_hashes // n_bands
-    sig = minhash_signature(spread_input(df), text_col, k, n_hashes, scheme=scheme).select(
+    sig = minhash_signature(spread_input(df), text_col, k, n_hashes).select(
         id_col, "minhash"
     )
     # materialize before the self-join: joining on COMPUTED columns makes

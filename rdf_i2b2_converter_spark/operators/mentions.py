@@ -40,6 +40,9 @@ from ..config import TOKEN_SPLIT_REGEX
 from ..functions.text import extract_text_py
 
 
+_SPLIT_RE = re.compile(TOKEN_SPLIT_REGEX)
+
+
 class TokenAhoCorasick:
     """Aho-Corasick over token sequences (not characters): states are token
     trie nodes, failure links computed by BFS. Match unit = gazetteer
@@ -51,7 +54,7 @@ class TokenAhoCorasick:
         self.out: list[list[tuple[str, int]]] = [[]]  # (surface, n_tokens)
         self.fail: list[int] = [0]
         for s in surfaces:
-            toks = tuple(t for t in re.split(TOKEN_SPLIT_REGEX, s.lower()) if t)
+            toks = tuple(t for t in _SPLIT_RE.split(s.lower()) if t)
             if not toks:
                 continue
             st = 0
@@ -97,25 +100,29 @@ class TokenAhoCorasick:
             for surface, n in self.out[st]:
                 yield surface, i - n + 1, i + 1
 
+    def mentions(self, text: str) -> dict[str, list[int]]:
+        """surface -> [begin, end, n] over ``text``'s tokens (the
+        TOKEN_SPLIT_REGEX split of its lowercase form): the token span of
+        the surface's FIRST occurrence and the count of ALL occurrences.
+        The one matcher loop of detect_mentions and synthetic.gen_mentions."""
+        seen: dict[str, list[int]] = {}
+        for surface, b, e in self.find([t for t in _SPLIT_RE.split(text.lower()) if t]):
+            ent = seen.get(surface)
+            if ent is None:
+                seen[surface] = [b, e, 1]
+            else:
+                ent[2] += 1
+        return seen
+
 
 # per-executor automaton cache keyed by the surface tuple ITSELF (true
 # content equality — review r5: a (len, hash) key could collide between
 # different surface lists and silently reuse the wrong automaton; id(bc.
 # value) is likewise unsafe since CPython reuses id() values after GC).
-# Capacity 2: a long-lived executor serving alternating gazetteers (two
-# streams, A/B jobs) keeps both automatons instead of rebuilding the
-# pure-Python trie on every switch.
+# Capacity 2: a long-lived executor serving alternating gazetteers (A/B
+# jobs) keeps both automatons instead of rebuilding the pure-Python trie
+# on every switch.
 _AC_CACHE: dict[tuple[str, ...], TokenAhoCorasick] = {}
-
-
-def broadcast_surfaces(gazetteer: DataFrame):
-    """Collect + broadcast the gazetteer's distinct surfaces ONCE for
-    reuse across detect_mentions calls — a per-micro-batch stream sink
-    would otherwise re-collect and re-broadcast every epoch and leak one
-    Broadcast per trigger (review r5)."""
-    spark = gazetteer.sparkSession
-    surfaces = sorted({r[0] for r in gazetteer.select("surface").collect()})
-    return spark.sparkContext.broadcast(surfaces)
 
 
 def detect_mentions(
@@ -125,7 +132,6 @@ def detect_mentions(
     repartition_to: int | None = None,
     passthrough_cols: tuple[str, ...] = (),
     counter=None,
-    surfaces_bc=None,
     html_col: str | None = None,
 ) -> DataFrame:
     """pages(text/url) x gazetteer(surface) -> MENTIONS(url, surface,
@@ -156,16 +162,12 @@ def detect_mentions(
     carry text leave it None.
     """
     spark = pages.sparkSession
-    if surfaces_bc is not None:
-        bc = surfaces_bc  # caller-managed reuse (streaming sinks)
-    else:
-        # dedupe driver-side: a distinct() over a dozen surfaces would spin
-        # up a whole shuffle stage for nothing
-        surfaces = sorted({r[0] for r in gazetteer.select("surface").collect()})
-        bc = spark.sparkContext.broadcast(surfaces)
+    # dedupe driver-side: a distinct() over a dozen surfaces would spin up
+    # a whole shuffle stage for nothing
+    surfaces = sorted({r[0] for r in gazetteer.select("surface").collect()})
+    bc = spark.sparkContext.broadcast(surfaces)
     if repartition_to:
         pages = pages.repartition(repartition_to)
-    split_re = re.compile(TOKEN_SPLIT_REGEX)
 
     from pyspark.sql import types as T
 
@@ -193,14 +195,7 @@ def detect_mentions(
                     text = extract_text_py(html)  # None when html is None
                 if not text:
                     continue
-                toks = [t for t in split_re.split(text.lower()) if t]
-                seen: dict[str, list[int]] = {}
-                for surface, b, e in ac.find(toks):
-                    ent = seen.get(surface)
-                    if ent is None:
-                        seen[surface] = [b, e, 1]
-                    else:
-                        ent[2] += 1
+                seen = ac.mentions(text)
                 if not seen:  # most web pages match nothing — skip the
                     continue  # per-scalar iloc extraction (review r5)
                 extra_vals = tuple(col.iloc[i] for col in extras)

@@ -19,12 +19,23 @@ We keep triples columnar:
   in the same pass). :func:`scan_turtle_errors` surfaces whatever either
   mode rejects (fail-soft ingest).
 
+Every Python parse in this module and in jsonld.py runs through one stage:
+:func:`_text_files` reads ``(file, value)`` rows (one per file or one per
+line) and :func:`_parse_stage` maps a per-row parse over them in a single
+``mapInPandas``. Each format has one parser-building function
+(:func:`_turtle_doc`, :func:`_turtle_line`, :func:`_rdfxml`,
+jsonld's ``_jsonld_doc`` and ``_jsonld_line``): its reader keeps the
+parser's ``.rows``, its error scan the parser's ``.errors``, so the two
+can never parse differently.
+
 Partition-pruned terminology routing replaces the reference's per-prefix
 side graphs (src/utils.py:148-153).
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import re
 from collections.abc import Iterator
 
@@ -42,6 +53,50 @@ _NT_RE = (
 )
 
 
+_TRIPLE_SCHEMA = "s string, p string, o string, o_datatype string, o_lang string"
+_TRIPLE_COLS = ["s", "p", "o", "o_datatype", "o_lang"]
+#: the error scans' rows: what failed (a line, 'file:line' or 'file@byte')
+_ERROR_SCHEMA = "value string, error string"
+
+
+def _text_files(spark: SparkSession, path: str, whole: bool) -> DataFrame:
+    """(file, value) rows of the text under ``path``: one per file
+    (``whole``, for the document formats) or one per line."""
+    return spark.read.text(path, wholetext=whole).select(
+        F.input_file_name().alias("file"), "value"
+    )
+
+
+def _parse_stage(src: DataFrame, parse, schema: str = _TRIPLE_SCHEMA) -> DataFrame:
+    """The one Python stage of every RDF reader and error scan: a
+    ``mapInPandas`` that calls ``parse(*row)`` on each row of ``src`` (its
+    columns passed positionally) and types the tuples it returns by the
+    DDL ``schema``."""
+    import pandas as pd
+
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[tuple] = []
+            for row in zip(*(pdf[c] for c in pdf.columns)):
+                rows.extend(parse(*row))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return src.mapInPandas(run, schema=schema)
+
+
+@functools.lru_cache(maxsize=4096)
+def _bnode_seed(file: str) -> str:
+    """Per-file bnode namespace seed: 64 bits of md5 — birthday-safe to
+    ~10^9 files (review r4: the previous 32-bit truncation collided with
+    >50% probability around 65k files, silently merging `_:b0` labels
+    across the colliding pair at exactly the many-file corpus scale the
+    document readers advertise). Memoized: line-mode parsers ask once per
+    line, and the lines of one file share the seed."""
+    return hashlib.md5(str(file).encode()).hexdigest()[:16]
+
+
 def read_ntriples(spark: SparkSession, path: str) -> DataFrame:
     """N-Triples file(s) -> TRIPLES_RAW(s, p, o, o_datatype, o_lang).
 
@@ -55,18 +110,17 @@ def read_ntriples(spark: SparkSession, path: str) -> DataFrame:
     codec inputs (.nt.gz) respread the raw lines before parsing — the
     guard lives HERE so the direct front door and read_rdf cannot drift
     (review r5)."""
-    lines = spark.read.text(path).withColumn("__file", F.input_file_name())
+    lines = _text_files(spark, path, whole=False)
     if _should_respread(spark, path):
         lines = lines.repartition(spark.sparkContext.defaultParallelism)
-    return ntriples_from_lines(lines, file_col="__file")
+    return ntriples_from_lines(lines, file_col="file")
 
 
 def ntriples_from_lines(lines: DataFrame, file_col: str | None = None) -> DataFrame:
-    """The N-Triples parse plan over any lines DataFrame. Two branches
-    (both legal on a STREAMING source, streaming/stream.
-    read_ntriples_stream): lines WITHOUT ``\\uXXXX``/``\\UXXXXXXXX``
-    escapes — the overwhelming majority — parse through pure column
-    expressions (JVM, no Python); lines carrying UCHAR escapes (classic
+    """The N-Triples parse plan over a lines DataFrame. Two branches:
+    lines WITHOUT ``\\uXXXX``/``\\UXXXXXXXX`` escapes — the
+    overwhelming majority — parse through pure column expressions (JVM,
+    no Python); lines carrying UCHAR escapes (classic
     ASCII-clean dumps; Jena still emits them) route through a small
     Python decoder, because codepoint conversion is not expressible in
     Catalyst (review r5 — they used to read back with the six literal
@@ -74,7 +128,7 @@ def ntriples_from_lines(lines: DataFrame, file_col: str | None = None) -> DataFr
     ``file_col`` names a provenance column, explicit ``_:label`` bnodes
     are namespaced per file (md5-64 of the column value, matching
     :func:`_bnode_seed`); without it labels are carried verbatim
-    (single-file / socket-stream semantics)."""
+    (single-document semantics)."""
     # one literal backslash then u/U + 4 hex — over-matching (e.g. an
     # ESCAPED backslash before 'u0041') is safe: the Python branch
     # decodes left-to-right and handles both cases correctly
@@ -89,42 +143,29 @@ def _ntriples_python_plan(lines: DataFrame, file_col: str | None) -> DataFrame:
     identically under Python re), full Turtle-family escape decoding via
     :func:`_unescape` on the RAW groups — never after the JVM's partial
     decode, which would double-decode ``\\\\u0041``."""
-    import pandas as pd
-
     pat = re.compile(_NT_RE)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        seeds: dict[str, str] = {}
-        for pdf in batches:
-            rows: list[tuple] = []
-            files = pdf[file_col] if file_col is not None else None
-            for i, line in enumerate(pdf["value"]):
-                m = pat.match(line or "")
-                if not m:
-                    continue  # surfaced by scan_errors, as in the JVM branch
-                s_iri, s_blank, p, o_iri, o_blank, o_lit, o_dt, o_lang = m.groups()
+    def parse(file, line):
+        m = pat.match(line or "")
+        if not m:
+            return ()  # surfaced by scan_errors, as in the JVM branch
+        s_iri, s_blank, p, o_iri, o_blank, o_lit, o_dt, o_lang = m.groups()
 
-                def bn(label: str) -> str:
-                    if files is None:
-                        return label
-                    f = files.iloc[i]
-                    seed = seeds.get(f)
-                    if seed is None:
-                        seed = seeds[f] = _bnode_seed(f)
-                    return f"_:g{seed}x{label[2:]}"
+        def bn(label: str) -> str:
+            return label if file is None else f"_:g{_bnode_seed(file)}x{label[2:]}"
 
-                s = _unescape(s_iri) if s_iri else bn(s_blank)
-                if o_iri:
-                    o, dt = _unescape(o_iri), None
-                elif o_blank:
-                    o, dt = bn(o_blank), None
-                else:
-                    o = _unescape(o_lit)
-                    dt = _unescape(o_dt) if o_dt else _PLAIN
-                rows.append((s, _unescape(p), o, dt, o_lang or None))
-            yield pd.DataFrame(rows, columns=_TRIPLE_COLS)
+        s = _unescape(s_iri) if s_iri else bn(s_blank)
+        if o_iri:
+            o, dt = _unescape(o_iri), None
+        elif o_blank:
+            o, dt = bn(o_blank), None
+        else:
+            o = _unescape(o_lit)
+            dt = _unescape(o_dt) if o_dt else _PLAIN
+        return [(s, _unescape(p), o, dt, o_lang or None)]
 
-    return lines.mapInPandas(parse, schema=_TRIPLE_SCHEMA)
+    file = F.col(file_col) if file_col is not None else F.lit(None).cast("string")
+    return _parse_stage(lines.select(file, "value"), parse)
 
 
 def _ntriples_jvm_plan(lines: DataFrame, file_col: str | None = None) -> DataFrame:
@@ -652,10 +693,12 @@ class _TurtleParser:
 
 
 def _parse_turtle_line(line: str, prefixes: dict[str, str], expand: bool):
-    """One Turtle statement line -> list of (s, p, o, o_datatype, o_lang).
+    """One Turtle statement line -> list of (s, p, o, o_datatype, o_lang),
+    with a given prefix table and ``_:label``s kept verbatim — the line
+    grammar on its own, as the property tests drive it (the line reader
+    and scan go through :func:`_turtle_line`).
 
-    Raises ValueError on anything outside the line subset (the caller
-    decides whether to fail or route to the error scan)."""
+    Raises ValueError on anything outside the line subset."""
     toks = _tokenize(line)
     if not toks:
         return []
@@ -668,29 +711,6 @@ def _parse_turtle_line(line: str, prefixes: dict[str, str], expand: bool):
     )
     p.statement_line()
     return [r[:5] for r in p.rows]
-
-
-def turtle_prefixes(spark: SparkSession, path: str) -> dict[str, str]:
-    """Collect the prefix table driver-side (diagnostics / line-mode error
-    scan): prefix directives are a config-sized handful per corpus."""
-    rows = (
-        spark.read.text(path)
-        # (?i): the directive keyword is case-insensitive (matching
-        # _PREFIX_RE) — a filter stricter than the parser's skip rule would
-        # silently lose the prefix while still skipping the line
-        .filter(F.col("value").rlike(r"(?i)^\s*(@prefix|prefix)\s"))
-        .collect()
-    )
-    prefixes: dict[str, str] = {}
-    for r in rows:
-        m = _PREFIX_RE.match(r["value"])
-        if m:
-            prefixes[m.group(1) or ""] = m.group(2)
-    return prefixes
-
-
-_TRIPLE_SCHEMA = "s string, p string, o string, o_datatype string, o_lang string"
-_TRIPLE_COLS = ["s", "p", "o", "o_datatype", "o_lang"]
 
 
 def _expand_col(name: str, bit: int, prefixes: dict[str, str]):
@@ -709,67 +729,37 @@ def _expand_col(name: str, bit: int, prefixes: dict[str, str]):
     return expr.alias(name)
 
 
-def turtle_lines_plan(lines: DataFrame, mode: str) -> DataFrame:
-    """The statement-per-line parse stage over any (file, value) lines
-    DataFrame -> tagged frame ('p' prefix rows / 't' triple rows with
-    pn_mask markers). STATELESS (no collect, no checkpoint), so it applies
-    unchanged to a STREAMING lines source (streaming/stream.
-    read_turtle_lines_stream) — the same reuse shape as
-    :func:`ntriples_from_lines`."""
-    import pandas as pd
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["kind", "file", *_TRIPLE_COLS, "pn_mask"]
-        seeds: dict[str, str] = {}  # one md5 per distinct file, not per line
-        for pdf in batches:
-            rows: list[tuple] = []
-            for file, line in zip(pdf["file"], pdf["value"]):
-                if not line:
-                    continue
-                m = _PREFIX_RE.match(line)
-                if m:
-                    # prefix rows carry their FILE: prefixes are
-                    # file-scoped declarations (review r5 — a corpus-wide
-                    # table let one file's namespace rebind another's)
-                    rows.append(
-                        ("p", file, m.group(1) or "", None, m.group(2), None, None, 0)
-                    )
-                    continue
-                if _BASE_RE.match(line):
-                    continue
-                toks = _tokenize(line)
-                if not toks:
-                    continue
-                seed = seeds.get(file)
-                if seed is None:
-                    seed = seeds[file] = _bnode_seed(file)
-                parser = _TurtleParser(
-                    toks, mode=mode, allow_structs=False, text=line,
-                    bnode_ns=f"g{seed}x", remap_blanks=True,
-                )
-                try:
-                    parser.statement_line()
-                except ValueError:
-                    continue  # surfaced by scan_turtle_errors
-                rows.extend(("t", file, *r) for r in parser.rows)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return lines.mapInPandas(
-        parse, schema=f"kind string, file string, {_TRIPLE_SCHEMA}, pn_mask int"
+def _turtle_line(file: str, line: str, mode: str = "expand") -> _TurtleParser:
+    """One line of statement-per-line Turtle, parsed the one way the line
+    reader (``.rows``) and its error scan (``.errors``) share. Blank and
+    directive lines yield nothing; a statement yields its rows, with
+    explicit ``_:label`` blank nodes in the file's namespace; a rejected
+    statement yields one error and no rows."""
+    skip = not line or _PREFIX_RE.match(line) or _BASE_RE.match(line)
+    parser = _TurtleParser(
+        [] if skip else _tokenize(line), mode=mode, allow_structs=False,
+        text=line, bnode_ns=f"g{_bnode_seed(file)}x", remap_blanks=True,
     )
+    try:
+        parser.statement_line()
+    except ValueError as e:
+        del parser.rows[:]
+        parser.errors.append((1, str(e)))
+    return parser
 
 
-def _read_turtle_lines(
-    spark: SparkSession, path: str, expand_prefixes: bool, respread: bool = False
-) -> DataFrame:
+def _read_turtle_lines(spark: SparkSession, path: str, expand_prefixes: bool) -> DataFrame:
     """Statement-per-line Turtle — the SPLITTABLE scale path (a 100 TB
     single-file dump parallelizes by line ranges). SINGLE text scan:
     workers parse with compact pnames + pn_mask markers and emit prefix
-    directives as tagged rows in the same pass; expansion happens
-    Catalyst-side from the collected (tiny) prefix table. In expand mode
-    the parsed columnar output is localCheckpoint'ed once — the price of
-    the single scan is one materialization of the PARSED triples (much
-    smaller than the raw text), not a second pass over the corpus.
+    directives as tagged rows ('p' prefix rows, 't' triple rows) in the
+    same pass; expansion happens Catalyst-side from the collected (tiny)
+    prefix table. In expand mode the parsed columnar output is
+    localCheckpoint'ed once — the price of the single scan is one
+    materialization of the PARSED triples (much smaller than the raw
+    text), not a second pass over the corpus. Few-file unsplittable-codec
+    inputs respread the raw lines before the parse stage, as in
+    :func:`read_ntriples`.
 
     Prefix scope (ADVICE r3, review r5): declarations are collected PER
     FILE and last-wins within a file — a statement textually before a
@@ -784,15 +774,25 @@ def _read_turtle_lines(
     declarations instead of an arbitrary collect-order winner. Explicit
     ``_:label`` blank nodes are remapped into a per-FILE namespace (labels
     are document-scoped; ``_:b0`` in two files must not merge)."""
-    import pandas as pd
-
-    lines = spark.read.text(path).select(F.input_file_name().alias("file"), "value")
-    if respread:
-        # unsplittable-codec few-file input: spread the RAW lines before
-        # the Python parse stage (the file column is captured above, so
-        # the shuffle does not lose provenance)
+    lines = _text_files(spark, path, whole=False)
+    if _should_respread(spark, path):
+        # the file column is captured before the shuffle, so the respread
+        # does not lose provenance
         lines = lines.repartition(spark.sparkContext.defaultParallelism)
-    parsed = turtle_lines_plan(lines, "defer" if expand_prefixes else "compact")
+    mode = "defer" if expand_prefixes else "compact"
+
+    def parse(file, line):
+        m = _PREFIX_RE.match(line or "")
+        if m:
+            # prefix rows carry their FILE: prefixes are file-scoped
+            # declarations (review r5 — a corpus-wide table let one file's
+            # namespace rebind another's)
+            return [("p", file, m.group(1) or "", None, m.group(2), None, None, 0)]
+        return [("t", file, *r) for r in _turtle_line(file, line, mode).rows]
+
+    parsed = _parse_stage(
+        lines, parse, f"kind string, file string, {_TRIPLE_SCHEMA}, pn_mask int"
+    )
     if not expand_prefixes:
         return parsed.filter(F.col("kind") == "t").select(*_TRIPLE_COLS)
     parsed = parsed.localCheckpoint(eager=True)
@@ -849,17 +849,6 @@ def _read_turtle_lines(
         expand_per_file("o_datatype", 8),
         F.col("o_lang"),
     )
-
-
-def _bnode_seed(file: str) -> str:
-    """Per-file bnode namespace seed: 64 bits of md5 — birthday-safe to
-    ~10^9 files (review r4: the previous 32-bit truncation collided with
-    >50% probability around 65k files, silently merging `_:b0` labels
-    across the colliding pair at exactly the many-file corpus scale the
-    document readers advertise)."""
-    import hashlib
-
-    return hashlib.md5(str(file).encode()).hexdigest()[:16]
 
 
 def _resolve_against(base: str | None, raw: str) -> str:
@@ -924,6 +913,22 @@ def _chunk_turtle_text(text: str, target_bytes: int):
     return out
 
 
+def _turtle_doc(
+    file: str, text: str, mode: str = "expand", prefixes: dict[str, str] | None = None,
+    base: str | None = None, offset: int = 0,
+) -> _TurtleParser:
+    """One Turtle document (or one chunk of it, starting at character
+    ``offset`` under the directive state ``prefixes``/``base``), parsed
+    fail-soft the one way the document reader (``.rows``) and its error
+    scan (``.errors``) share, with the file's bnode namespace."""
+    parser = _TurtleParser(
+        _tokenize(text), prefixes=prefixes, mode=mode, bnode_ns=f"g{_bnode_seed(file)}x",
+        text=text, base=base, offset_base=offset, remap_blanks=True,
+    )
+    parser.document()
+    return parser
+
+
 def _read_turtle_documents(
     spark: SparkSession, path: str, expand_prefixes: bool, chunk_bytes: int | None = None
 ) -> DataFrame:
@@ -946,66 +951,31 @@ def _read_turtle_documents(
     splitter task still holds one file's text (wholetext), but the parse —
     the expensive part — runs one task per chunk, and offset-based bnode
     labels make the output identical to the single-task parse."""
-    import json as _json
+    import json
 
-    import pandas as pd
-
-    files = spark.read.text(path, wholetext=True).select(
-        F.input_file_name().alias("file"), "value"
-    )
+    files = _text_files(spark, path, whole=True)
     mode = "expand" if expand_prefixes else "compact"
-
     if chunk_bytes is None:
+        return _parse_stage(
+            files, lambda file, text: [r[:5] for r in _turtle_doc(file, text, mode).rows]
+        )
 
-        def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows: list[tuple] = []
-                for file, text in zip(pdf["file"], pdf["value"]):
-                    parser = _TurtleParser(
-                        _tokenize(text), mode=mode, bnode_ns=f"g{_bnode_seed(file)}x",
-                        text=text, remap_blanks=True,
-                    )
-                    parser.document()  # fail-soft; errors via scan_turtle_errors
-                    rows.extend(r[:5] for r in parser.rows)
-                yield pd.DataFrame(rows, columns=_TRIPLE_COLS)
+    def split(file, text):
+        return [
+            (file, off, chunk, json.dumps(pfx), base)
+            for chunk, off, pfx, base in _chunk_turtle_text(text, chunk_bytes)
+        ]
 
-        return files.mapInPandas(parse, schema=_TRIPLE_SCHEMA)
+    def parse_chunk(file, off, chunk, prefixes, base):
+        parser = _turtle_doc(
+            file, chunk, mode, json.loads(prefixes), base or None, int(off)
+        )
+        return [r[:5] for r in parser.rows]
 
-    def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for file, text in zip(pdf["file"], pdf["value"]):
-                for chunk, off, pfx, base in _chunk_turtle_text(text, chunk_bytes):
-                    rows.append((str(file), off, chunk, _json.dumps(pfx), base))
-            yield pd.DataFrame(
-                rows, columns=["file", "off", "chunk", "prefixes", "base"]
-            )
-
-    chunks = files.mapInPandas(
-        split, schema="file string, off long, chunk string, prefixes string, base string"
+    chunks = _parse_stage(
+        files, split, "file string, off long, chunk string, prefixes string, base string"
     ).repartition(F.col("file"), F.col("off"))
-
-    def parse_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for file, off, chunk, pfx_json, base in zip(
-                pdf["file"], pdf["off"], pdf["chunk"], pdf["prefixes"], pdf["base"]
-            ):
-                parser = _TurtleParser(
-                    _tokenize(chunk),
-                    prefixes=_json.loads(pfx_json),
-                    mode=mode,
-                    bnode_ns=f"g{_bnode_seed(file)}x",
-                    text=chunk,
-                    base=base if base is not None and not pd.isna(base) else None,
-                    offset_base=int(off),
-                    remap_blanks=True,
-                )
-                parser.document()
-                rows.extend(r[:5] for r in parser.rows)
-            yield pd.DataFrame(rows, columns=_TRIPLE_COLS)
-
-    return chunks.mapInPandas(parse_chunks, schema=_TRIPLE_SCHEMA)
+    return _parse_stage(chunks, parse_chunk)
 
 
 def read_turtle(
@@ -1014,7 +984,6 @@ def read_turtle(
     expand_prefixes: bool = True,
     multiline: bool = True,
     chunk_bytes: int | None = None,
-    respread: bool = False,
 ) -> DataFrame:
     """Turtle file(s) -> TRIPLES_RAW(s, p, o, o_datatype, o_lang).
 
@@ -1028,6 +997,8 @@ def read_turtle(
     (the 100 TB single-file path) and single-scan via deferred pname
     expansion. Unparseable lines are skipped here and surfaced by
     :func:`scan_turtle_errors` (fail-soft, same posture as read_ntriples).
+    Few-file unsplittable-codec inputs (.ttl.gz) respread the raw lines
+    before parsing, the same guard as read_ntriples.
 
     ``expand_prefixes``: True resolves prefixed names to full IRIs
     (rdflib parity); False keeps the compact ``p:local`` form the engine's
@@ -1037,46 +1008,33 @@ def read_turtle(
     ``chunk_bytes`` (document mode only): split each file at top-level
     statement boundaries into ~chunk_bytes blocks parsed in parallel —
     FULL Turtle for giant single files, with output identical to the
-    single-task parse (offset-stable bnode labels).
-
-    ``respread`` (line mode only): repartition the raw lines before the
-    parse stage — for few-file unsplittable-codec inputs (see
-    read_rdf's _should_respread, which decides this automatically)."""
+    single-task parse (offset-stable bnode labels)."""
     if multiline:
         return _read_turtle_documents(spark, path, expand_prefixes, chunk_bytes)
-    return _read_turtle_lines(spark, path, expand_prefixes, respread)
+    return _read_turtle_lines(spark, path, expand_prefixes)
 
 
 def scan_turtle_errors(spark: SparkSession, path: str, multiline: bool = True) -> DataFrame:
     """What the Turtle reader could not parse — report, don't crash the
     100 TB ingest. Document mode: one row per failed statement
     ('file:line', error); line mode: one row per rejected line."""
-    import pandas as pd
-
     if multiline:
-        files = spark.read.text(path, wholetext=True).select(
-            F.input_file_name().alias("file"), "value"
+        return _parse_stage(
+            _text_files(spark, path, whole=True),
+            lambda file, text: [
+                (f"{file}:{ln}", msg) for ln, msg in _turtle_doc(file, text).errors
+            ],
+            _ERROR_SCHEMA,
         )
 
-        def check_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                bad: list[tuple[str, str]] = []
-                for file, text in zip(pdf["file"], pdf["value"]):
-                    parser = _TurtleParser(_tokenize(text), mode="expand", text=text)
-                    parser.document()
-                    bad.extend((f"{file}:{ln}", msg) for ln, msg in parser.errors)
-                yield pd.DataFrame(bad, columns=["value", "error"])
-
-        return files.mapInPandas(check_docs, schema="value string, error string")
-
     # ADVICE r3: line mode's prefix table is whole-file last-wins — a label
-    # re-declared with a DIFFERENT IRI silently picks one; surface it here.
-    # ONE collected scan feeds both the dup detection and the prefix table
-    # (review r4: this used to scan the corpus twice back-to-back)
+    # re-declared with a DIFFERENT IRI silently picks one; surface it here
     seen: dict[str, str] = {}
     dup_rows: list[tuple[str, str]] = []
     for r in (
         spark.read.text(path)
+        # (?i): the directive keyword is case-insensitive (matching
+        # _PREFIX_RE)
         .filter(F.col("value").rlike(r"(?i)^\s*(@prefix|prefix)\s"))
         .collect()
     ):
@@ -1094,27 +1052,13 @@ def scan_turtle_errors(spark: SparkSession, path: str, multiline: bool = True) -
             )
         seen[label] = iri
 
-    bc = spark.sparkContext.broadcast(dict(seen))
-    lines = spark.read.text(path)
-
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pfx = bc.value
-        for pdf in batches:
-            bad: list[tuple[str, str]] = []
-            for line in pdf["value"]:
-                if not line or _PREFIX_RE.match(line) or _BASE_RE.match(line):
-                    continue
-                try:
-                    _parse_turtle_line(line, pfx, True)
-                except ValueError as e:
-                    bad.append((line, str(e)))
-            yield pd.DataFrame(bad, columns=["value", "error"])
-
-    scanned = lines.mapInPandas(check, schema="value string, error string")
+    scanned = _parse_stage(
+        _text_files(spark, path, whole=False),
+        lambda file, line: [(line, msg) for _ln, msg in _turtle_line(file, line).errors],
+        _ERROR_SCHEMA,
+    )
     if dup_rows:
-        scanned = scanned.unionByName(
-            spark.createDataFrame(dup_rows, "value string, error string")
-        )
+        scanned = scanned.unionByName(spark.createDataFrame(dup_rows, _ERROR_SCHEMA))
     return scanned
 
 
@@ -1393,6 +1337,12 @@ class _RdfXmlParser:
         return self
 
 
+def _rdfxml(file: str, text: str) -> _RdfXmlParser:
+    """One RDF/XML document, parsed the one way :func:`read_rdfxml`
+    (``.rows``) and :func:`scan_rdfxml_errors` (``.errors``) share."""
+    return _RdfXmlParser(bnode_ns=f"g{_bnode_seed(file)}x").parse(text)
+
+
 def read_rdfxml(spark: SparkSession, path: str) -> DataFrame:
     """RDF/XML file(s) -> TRIPLES_RAW(s, p, o, o_datatype, o_lang) — same
     one-whole-file-per-task ``mapInPandas`` shape as the Turtle document
@@ -1400,43 +1350,19 @@ def read_rdfxml(spark: SparkSession, path: str) -> DataFrame:
     count). IRIs are always full; plain literals carry the 'xsd:string'
     sentinel; bnode labels are per-file namespaced. Parse errors are
     fail-soft — surfaced by :func:`scan_rdfxml_errors`."""
-    import pandas as pd
-
-    files = spark.read.text(path, wholetext=True).select(
-        F.input_file_name().alias("file"), "value"
+    return _parse_stage(
+        _text_files(spark, path, whole=True), lambda file, text: _rdfxml(file, text).rows
     )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for file, text in zip(pdf["file"], pdf["value"]):
-                parser = _RdfXmlParser(bnode_ns=f"g{_bnode_seed(file)}x")
-                parser.parse(text)
-                rows.extend(parser.rows)
-            yield pd.DataFrame(rows, columns=_TRIPLE_COLS)
-
-    return files.mapInPandas(parse, schema=_TRIPLE_SCHEMA)
 
 
 def scan_rdfxml_errors(spark: SparkSession, path: str) -> DataFrame:
     """What the RDF/XML reader could not parse — one row per recorded
     error ('file@byte', message); report, don't crash the ingest."""
-    import pandas as pd
-
-    files = spark.read.text(path, wholetext=True).select(
-        F.input_file_name().alias("file"), "value"
+    return _parse_stage(
+        _text_files(spark, path, whole=True),
+        lambda file, text: [(f"{file}@{off}", msg) for off, msg in _rdfxml(file, text).errors],
+        _ERROR_SCHEMA,
     )
-
-    def check(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            bad: list[tuple[str, str]] = []
-            for file, text in zip(pdf["file"], pdf["value"]):
-                parser = _RdfXmlParser(bnode_ns=f"g{_bnode_seed(file)}x")
-                parser.parse(text)
-                bad.extend((f"{file}@{off}", msg) for off, msg in parser.errors)
-            yield pd.DataFrame(bad, columns=["value", "error"])
-
-    return files.mapInPandas(check, schema="value string, error string")
 
 
 #: document-mode inputs larger than this are warned about (ADVICE r3: a
@@ -1612,9 +1538,7 @@ def read_rdf(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
     if fmt == "turtle":
         return read_turtle(spark, path, chunk_bytes=turtle_doc_chunk_bytes(spark, path))
     if fmt == "turtle-lines":
-        return read_turtle(
-            spark, path, multiline=False, respread=_should_respread(spark, path)
-        )
+        return read_turtle(spark, path, multiline=False)
     if fmt == "rdfxml":
         return read_rdfxml(spark, path)
     if fmt == "jsonld":
