@@ -24,6 +24,16 @@ def _spark(args):
     return get_spark("spark-kg-cli", master=args.master)
 
 
+def _write_counted(df, path: str) -> int:
+    """Write ``df`` as parquet; its row count, observed on the write."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    seen = Observation()
+    df.observe(seen, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    return seen.get["n"]
+
+
 def cmd_ontology(args) -> int:
     from .plans.ontology_pipeline import run_ontology_pipeline
 
@@ -31,8 +41,7 @@ def cmd_ontology(args) -> int:
     ontology = spark.read.parquet(args.ontology)
     outs = run_ontology_pipeline(ontology)
     for name, df in outs.items():
-        df.write.mode("overwrite").parquet(f"{args.out}/{name}")
-        print(f"wrote {name}: {df.count()} rows")
+        print(f"wrote {name}: {_write_counted(df, f'{args.out}/{name}')} rows")
     return 0
 
 
@@ -102,8 +111,7 @@ def cmd_data(args) -> int:
         obs, encounter_map = reindex(obs, "encounter_num")
         patient_map.write.mode("overwrite").parquet(f"{args.out}/patient_mapping")
         encounter_map.write.mode("overwrite").parquet(f"{args.out}/encounter_mapping")
-    obs.write.mode("overwrite").parquet(f"{args.out}/observation_fact")
-    print(json.dumps({"n_observations": spark.read.parquet(f"{args.out}/observation_fact").count()}))
+    print(json.dumps({"n_observations": _write_counted(obs, f"{args.out}/observation_fact")}))
     return 0
 
 

@@ -110,8 +110,8 @@ def connected_components(
 
     # symmetrize WITH self-loops kept: a node whose only edges are
     # self-loops must still appear in the mapping (review r5): raw_nodes
-    # reads them from here; the star loop gets loop-free edges. Lazy:
-    # round 1 of the star loop materializes it
+    # reads them from here; the star loop gets loop-free edges. Under AQE
+    # the distinct's exchange runs here; only its final stage waits
     e_all = (
         pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
@@ -125,7 +125,8 @@ def connected_components(
     prev_sig = None
     converged = False
     for _ in range(max_rounds):
-        # lazy: the signature aggregate below materializes the round
+        # under AQE the round's shuffles run here; only its final stage
+        # waits for the signature aggregate below
         e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         sig = e.agg(
             F.count("*").alias("n"),

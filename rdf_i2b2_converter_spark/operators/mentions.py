@@ -131,7 +131,6 @@ def detect_mentions(
     text_col: str = "text",
     repartition_to: int | None = None,
     passthrough_cols: tuple[str, ...] = (),
-    counter=None,
     html_col: str | None = None,
 ) -> DataFrame:
     """pages(text/url) x gazetteer(surface) -> MENTIONS(url, surface,
@@ -147,11 +146,6 @@ def detect_mentions(
     ``repartition_to``: optionally shuffle pages to N partitions first —
     useful when the source collapses to few input splits (tiny local files);
     at real scale leave None and let input splits drive parallelism.
-
-    ``counter``: optional Spark accumulator incremented by the number of
-    mention rows per batch — per-partition counters without an extra pass
-    (north_rule lineage+metrics; may over-count on task retries, like any
-    Spark accumulator used for metrics).
 
     ``html_col``: optional binary html column. A row whose ``text_col`` is
     NULL gets its text from ``extract_text_py(html)`` inside the matcher's
@@ -201,8 +195,6 @@ def detect_mentions(
                 extra_vals = tuple(col.iloc[i] for col in extras)
                 for surface, (b, e, n) in seen.items():
                     rows.append((url, surface, b, e, n) + extra_vals)
-            if counter is not None:
-                counter.add(len(rows))
             yield pd.DataFrame(
                 rows, columns=base_cols + list(passthrough_cols)
             ).astype({"begin_pos": "int32", "end_pos": "int32", "n_occurrences": "int32"})

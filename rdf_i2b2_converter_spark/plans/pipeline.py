@@ -7,6 +7,9 @@ plus awk post-production collapse into ONE Catalyst DAG here:
         --link--> --canonicalize--> --emit_triples-->
         partitioned sink (+ integrity check + metrics)
 
+Counters are ``pyspark.sql.Observation``s on the sink write's plan, not
+extra passes (see ``PipelineMetrics``).
+
 Resumability: the reference's append-mode CSV cannot resume
 (src/data_loader.py:34-43); we write per-``part_id`` parquet partitions and
 keep a ledger of completed source-partition ranges, so a crashed run skips
@@ -23,7 +26,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.canonicalize import connected_components
@@ -35,7 +38,14 @@ from ..functions.text import extract_text
 @dataclass
 class PipelineMetrics:
     """Per-run lineage + counters (north_rule: per-partition lineage and
-    metrics). Written next to the sink as _metrics.json."""
+    metrics). Written next to the sink as _metrics.json.
+
+    ``n_pages``/``n_mentions``: Observations in map stages of the sink
+    write (they over-count only if a map stage re-runs after its shuffle
+    output is lost); with every part resumed, a direct page count and 0.
+    Ledger per-part counts: an Observation in the write's result stage
+    (exact under task retries). ``n_triples`` counts the sink, resumed
+    parts included; the mismatch/violation counts are exact queries."""
 
     started_at: float = field(default_factory=time.time)
     n_pages: int = 0
@@ -69,9 +79,14 @@ def build_triples(
     alias_edges: DataFrame | None = None,
     hash_fn: str = "xxhash64",
     n_parts: int = 64,
-    mention_counter=None,
 ) -> DataFrame:
     """The full logical plan, lazily composed (no actions)."""
+    return build_triples_from_mentions(
+        _detect(pages, gazetteer), gazetteer, alias_edges, hash_fn, n_parts
+    )
+
+
+def _detect(pages: DataFrame, gazetteer: DataFrame) -> DataFrame:
     # Extraction happens inside the matcher: a row without text gets it
     # from its html in the matcher's own worker (html_col), so each page
     # task runs ONE Python worker. A separate extract_text eval would be an
@@ -83,12 +98,8 @@ def build_triples(
     # re-join of mentions to pages on url would need either a shuffle of
     # the full page set or a driver-built broadcast of it; both are the
     # kind of hidden serial cost that caps scaling.
-    mentions = detect_mentions(
-        pages, gazetteer, passthrough_cols=("lang", "warc_ts"),
-        counter=mention_counter, html_col="html",
-    )
-    return build_triples_from_mentions(
-        mentions, gazetteer, alias_edges, hash_fn, n_parts
+    return detect_mentions(
+        pages, gazetteer, passthrough_cols=("lang", "warc_ts"), html_col="html"
     )
 
 
@@ -112,6 +123,12 @@ def build_triples_from_mentions(
     )
 
 
+def _observed_count(seen: Observation, frame: DataFrame) -> int:
+    """The count ``seen`` observed on ``frame``, or a direct count: AQE
+    drops an all-empty map stage's observations (completed as empty rows)."""
+    return next(iter(seen.get.values())) if seen._jo.getRow().length() else frame.count()
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -126,9 +143,11 @@ def run_pipeline(
     """Execute the plan; if ``sink_dir`` is given, write partitioned parquet
     with an idempotent per-part ledger and dump metrics."""
     metrics = PipelineMetrics()
-    mention_acc = spark.sparkContext.accumulator(0)
-    triples = build_triples(
-        pages, gazetteer, alias_edges, hash_fn, n_parts, mention_counter=mention_acc
+    pages_seen, mentions_seen = Observation(), Observation()
+    mentions = _detect(pages.observe(pages_seen, F.count(F.lit(1))), gazetteer)
+    triples = build_triples_from_mentions(
+        mentions.observe(mentions_seen, F.count(F.lit(1))),
+        gazetteer, alias_edges, hash_fn, n_parts,
     )
 
     if sink_dir is None:
@@ -152,42 +171,41 @@ def run_pipeline(
     done: set[int] = set(ledger["completed_parts"])
 
     todo = [p for p in range(n_parts) if p not in done]
-    # counted before the ledger is written: every part records it
-    metrics.n_pages = pages.count()
     if todo:
-        pending = triples.filter(F.col("part_id").isin(todo))
+        # per-part counts for the ledger (north_rule: per-partition
+        # lineage), observed in the write's result stage
+        parts_seen = Observation()
         (
-            pending.repartition("part_id")
+            triples.filter(F.col("part_id").isin(todo))
+            .repartition("part_id")
+            .observe(
+                parts_seen, *[F.count_if(F.col("part_id") == p).alias(str(p)) for p in todo]
+            )
             .write.mode("overwrite")
             .partitionBy("part_id")
             .option("partitionOverwriteMode", "dynamic")
             .parquet(os.path.join(sink_dir, "triples"))
         )
-        # per-partition lineage: row count + write time per completed part
-        # (north_rule: per-partition lineage + counter metrics) — read back
-        # from the sink so the ledger records what is actually on disk
-        written = (
-            spark.read.parquet(os.path.join(sink_dir, "triples"))
-            .filter(F.col("part_id").isin(todo))
-            .groupBy("part_id")
-            .count()
-            .collect()
-        )
-        counts = {int(r["part_id"]): int(r["count"]) for r in written}
+        # Observation.get blocks until its plan has run
+        counts = parts_seen.get
+        metrics.n_pages = _observed_count(pages_seen, pages)
+        metrics.n_mentions = _observed_count(mentions_seen, mentions)
         stamp = time.time()
         for p in todo:
             ledger["parts"][str(p)] = {
-                "n_triples": counts.get(p, 0),
+                "n_triples": counts[str(p)],
                 "written_at": round(stamp, 2),
                 "n_source_pages": metrics.n_pages,
             }
         done.update(todo)
         ledger["completed_parts"] = sorted(done)
         write_text_file(spark, ledger_path, json.dumps(ledger))
+    else:  # every part resumed: nothing ran, nothing was observed
+        metrics.n_pages = pages.count()
 
-    out = spark.read.parquet(os.path.join(sink_dir, "triples"))
+    # the triples schema: a run that wrote no rows left no file to infer it from
+    out = spark.read.schema(triples.schema).parquet(os.path.join(sink_dir, "triples"))
     metrics.n_triples = out.count()
-    metrics.n_mentions = mention_acc.value  # 0 when all parts resumed
     if "html" in pages.columns:
         metrics.n_extract_mismatches = verify_extraction(pages).count()
     if ontology_closed is not None:

@@ -305,7 +305,8 @@ def read_jsonld(spark: SparkSession, path: str) -> DataFrame:
     from .rdf import warn_document_mode_size
 
     warn_document_mode_size(
-        spark, path, "JSON-LD", "read_jsonld_lines (NDJSON, one node object per line)"
+        spark, path, "JSON-LD",
+        "No chunking; for scale prefer read_jsonld_lines (NDJSON, one node object per line).",
     )
     return _parse_stage(
         _text_files(spark, path, whole=True), lambda file, text: _jsonld_doc(file, text).rows

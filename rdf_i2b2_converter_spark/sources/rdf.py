@@ -1028,11 +1028,12 @@ def scan_turtle_errors(spark: SparkSession, path: str, multiline: bool = True) -
         )
 
     # ADVICE r3: line mode's prefix table is whole-file last-wins — a label
-    # re-declared with a DIFFERENT IRI silently picks one; surface it here
-    seen: dict[str, str] = {}
+    # re-declared in one file with a DIFFERENT IRI silently picks one;
+    # surface it here (prefixes are scoped per file, as in the reader)
+    seen: dict[tuple[str, str], str] = {}
     dup_rows: list[tuple[str, str]] = []
     for r in (
-        spark.read.text(path)
+        _text_files(spark, path, whole=False)
         # (?i): the directive keyword is case-insensitive (matching
         # _PREFIX_RE)
         .filter(F.col("value").rlike(r"(?i)^\s*(@prefix|prefix)\s"))
@@ -1041,16 +1042,16 @@ def scan_turtle_errors(spark: SparkSession, path: str, multiline: bool = True) -
         m = _PREFIX_RE.match(r["value"])
         if not m:
             continue
-        label, iri = m.group(1) or "", m.group(2)
-        if label in seen and seen[label] != iri:
+        key, iri = (r["file"], m.group(1) or ""), m.group(2)
+        if key in seen and seen[key] != iri:
             dup_rows.append(
                 (r["value"],
-                 f"prefix '{label}:' re-declared with conflicting IRI "
-                 f"(<{seen[label]}> vs <{iri}>); line mode applies last-wins "
+                 f"prefix '{key[1]}:' re-declared with conflicting IRI "
+                 f"(<{seen[key]}> vs <{iri}>); line mode applies last-wins "
                  "whole-file scope — use the document reader for "
                  "declaration-ordered semantics")
             )
-        seen[label] = iri
+        seen[key] = iri
 
     scanned = _parse_stage(
         _text_files(spark, path, whole=False),
@@ -1434,50 +1435,36 @@ def _max_input_file_bytes(spark: SparkSession, path: str) -> int:
 
 def turtle_doc_chunk_bytes(spark: SparkSession, path: str) -> int | None:
     """Shared auto-chunk decision for document-mode Turtle (read_rdf and
-    the data CLI use the same policy and the same warning): estimate the
-    biggest input file's DECOMPRESSED size (compression detected on real
-    member file names, so a directory of .ttl.bz2 counts) and, above the
+    the data CLI use the same policy and the same warning): above the
     wholetext bound, warn and return the chunk size to parse in parallel
     blocks."""
-    biggest, _count, compressed = _input_files_stats(spark, path)
-    est = biggest * (_COMPRESSION_EXPANSION_GUESS if compressed else 1)
-    if est > _TTL_DOC_WARN_BYTES:
-        import warnings
-
-        warnings.warn(
-            f"a Turtle input file is ~{est >> 20} MiB decompressed; document "
-            "mode holds each whole file in one splitter task (wholetext). "
-            "Auto-chunking the parse at top-level statement boundaries; for "
-            "statement-per-line dumps prefer fmt='turtle-lines' (fully "
-            "line-splittable, no whole-file materialization).",
-            stacklevel=3,
-        )
-        return _TTL_AUTO_CHUNK_BYTES
-    return None
+    oversized = warn_document_mode_size(
+        spark, path, "Turtle",
+        "Auto-chunking the parse at top-level statement boundaries; for "
+        "statement-per-line dumps prefer fmt='turtle-lines' (fully "
+        "line-splittable, no whole-file materialization).",
+    )
+    return _TTL_AUTO_CHUNK_BYTES if oversized else None
 
 
-def warn_document_mode_size(
-    spark: SparkSession, path: str, what: str, alternative: str
-) -> bool:
-    """Shared wholetext-size guard for document readers WITHOUT a chunker
-    (JSON-LD — a JSON splitter does not exist the way the Turtle
-    statement-boundary one does): estimate the biggest input file's
-    decompressed size and warn above the bound, pointing at the
-    line-splittable alternative (VERDICT r4 #2 — a 1 GiB .jsonld was one
+def warn_document_mode_size(spark: SparkSession, path: str, what: str, advice: str) -> bool:
+    """The one wholetext-size guard of the document readers: estimate the
+    biggest input file's DECOMPRESSED size (compression detected on real
+    member file names, so a directory of .ttl.bz2 counts) and warn with
+    ``advice`` above the bound (VERDICT r4 #2 — a 1 GiB .jsonld was one
     silent task). Returns True when the warning fired."""
     biggest, _count, compressed = _input_files_stats(spark, path)
     est = biggest * (_COMPRESSION_EXPANSION_GUESS if compressed else 1)
-    if est > _TTL_DOC_WARN_BYTES:
-        import warnings
+    if est <= _TTL_DOC_WARN_BYTES:
+        return False
+    import warnings
 
-        warnings.warn(
-            f"a {what} input file is ~{est >> 20} MiB decompressed; document "
-            "mode holds each whole file in one task (wholetext) with no "
-            f"chunking. For scale prefer {alternative}.",
-            stacklevel=3,
-        )
-        return True
-    return False
+    warnings.warn(
+        f"a {what} input file is ~{est >> 20} MiB decompressed; document "
+        f"mode holds each whole file in one task (wholetext). {advice}",
+        stacklevel=3,
+    )
+    return True
 
 
 def _should_respread(spark: SparkSession, path: str) -> bool:

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -13,6 +14,24 @@ def spark():
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def jobs_of(spark):
+    """``jobs_of(fn)`` runs ``fn()`` under a fresh job group and returns
+    the ids of the jobs it ran, and its result."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs-of-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+            return list(sc.statusTracker().getJobIdsForGroup(group)), out
+        finally:
+            sc.setJobGroup("", "")
+
+    return run
 
 
 @pytest.fixture(scope="session")

@@ -166,7 +166,7 @@ def test_instance_numbering_matches_window_form(spark, obs):
     assert "row_number" in plan  # the per-range-partition numbering window
 
 
-def test_dense_id_scalable_plan_build_is_lazy(spark):
+def test_dense_id_scalable_plan_build_is_lazy(spark, jobs_of):
     """Review r3: dense_id_scalable used to eager-checkpoint + collect at
     plan-BUILD time, running the whole upstream as a side effect of merely
     composing the plan. Now it runs no job beyond what a lazy checkpoint
@@ -183,24 +183,23 @@ def test_dense_id_scalable_plan_build_is_lazy(spark):
     df = spark.createDataFrame(
         [(f"c{i % 3}", f"i{i}") for i in range(50)], "class_uri string, instance_uri string"
     )
-    sc = spark.sparkContext
     # floor: repartitionByRange itself runs the RangePartitioner boundary
     # sketch at RDD creation — that's Spark, not our code. The regression
     # being guarded against is the EXTRA work (eager checkpoint
     # materialization + driver collect) beyond that sketch.
-    sc.setJobGroup("lazy-floor", "range sampler sketch only")
-    df.select("class_uri", "instance_uri").distinct().repartitionByRange(
-        4, "class_uri", "instance_uri"
-    ).localCheckpoint(eager=False)
-    floor = len(sc.statusTracker().getJobIdsForGroup("lazy-floor"))
-    sc.setJobGroup("lazy-check", "plan build must not execute beyond the sketch")
-    try:
+    floor, _ = jobs_of(
+        lambda: df.select("class_uri", "instance_uri").distinct().repartitionByRange(
+            4, "class_uri", "instance_uri"
+        ).localCheckpoint(eager=False)
+    )
+
+    def build():
         ids = dense_id_scalable(df, ["class_uri", "instance_uri"], num_partitions=4)
         _ = ids.schema
-        jobs = list(sc.statusTracker().getJobIdsForGroup("lazy-check"))
-        assert len(jobs) <= floor, f"plan build ran extra jobs: {jobs} (sketch floor {floor})"
-    finally:
-        sc.setJobGroup("", "")
+        return ids
+
+    jobs, ids = jobs_of(build)
+    assert len(jobs) <= len(floor), f"plan build ran extra jobs: {jobs} (sketch floor {floor})"
     # and the lazy form still numbers bit-identically to the window form
     w = Window.orderBy("class_uri", "instance_uri")
     got = {tuple(r) for r in ids.collect()}
@@ -346,7 +345,7 @@ def test_first_wins_context_independent_of_partitioning(spark):
             assert {r["patient_num"] for r in obs.collect()} == {"pA"}, (order[0], n_parts)
 
 
-def test_extract_and_reindex_job_budget(spark, obs_graph):
+def test_extract_and_reindex_job_budget(spark, obs_graph, jobs_of):
     """Job count of the data flow (extract_observations, both reindex
     calls, the three writes) on a small graph: the driver paths of the
     subtree assignment and the numbering, and the numbered frame
@@ -354,15 +353,12 @@ def test_extract_and_reindex_job_budget(spark, obs_graph):
     the benchmark's rdf_facts flow, 28 after)."""
     from rdf_i2b2_converter_spark.operators.postprod import reindex
 
-    sc = spark.sparkContext
-    sc.setJobGroup("data-flow-budget", "extract + reindex + three writes")
-    try:
+    def flow():
         obs = extract_observations(obs_graph, ["kg:Diagnosis"])
         obs, patient_map = reindex(obs, "patient_num")
         obs, encounter_map = reindex(obs, "encounter_num")
         for df in (patient_map, encounter_map, obs):
             df.write.format("noop").mode("overwrite").save()
-        jobs = sc.statusTracker().getJobIdsForGroup("data-flow-budget")
-    finally:
-        sc.setJobGroup("", "")
+
+    jobs, _ = jobs_of(flow)
     assert len(jobs) <= JOB_BUDGET, f"{len(jobs)} jobs"

@@ -18,17 +18,6 @@ def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def _jobs(spark, group, fn):
-    """Job ids that ``fn()`` runs, and its result."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-        return list(sc.statusTracker().getJobIdsForGroup(group)), out
-    finally:
-        sc.setJobGroup("", "")
-
-
 def _cross(xs, ys, _cap):
     return [(x[0], y[0]) for x in xs for y in ys]
 
@@ -61,7 +50,7 @@ def test_small_side_output_over_cap_or_build_none_declines(spark):
     assert small_side([a, b], 100, lambda *_: None, _PAIR) is None
 
 
-def test_crawl_driver_paths_run_only_their_capped_collect(spark, corpus):
+def test_crawl_driver_paths_run_only_their_capped_collect(spark, corpus, jobs_of):
     """crawl_kg's two driver paths on the corpus: close_ontology and
     connected_components each run no job beyond their one capped collect
     (measured as the same collect of their cached input), and each result
@@ -70,8 +59,8 @@ def test_crawl_driver_paths_run_only_their_capped_collect(spark, corpus):
         ("close", corpus["ontology"], 100_000, close_ontology),
         ("cc", corpus["alias_edges"], 400_000, connected_components),
     ):
-        floor, _ = _jobs(spark, f"{name}-floor", lambda: src.limit(cap + 1).collect())
-        jobs, out = _jobs(spark, f"{name}-driver-path", lambda: fn(src))
+        floor, _ = jobs_of(lambda: src.limit(cap + 1).collect())
+        jobs, out = jobs_of(lambda: fn(src))
         assert 1 <= len(jobs) <= len(floor), (name, jobs, floor)
         assert "LocalTableScan" in _plan(out), name
 

@@ -121,3 +121,61 @@ def test_fused_plan_has_single_python_stage(spark):
     # the unfused plan chains the synthesis node into the matcher, which
     # extracts any missing text itself (no separate extract_text node)
     assert n_python_nodes(unfused) == 2
+
+
+#: jobs of one fresh ``run_pipeline`` call with an ontology on the
+#: ``corpus`` fixture (measured; the sink read-back and the page count
+#: pass it replaced cost 23 before the counters came from the write)
+PIPELINE_JOB_BUDGET = 17
+
+
+def _run(spark, corpus, sink, pages=None, **kw):
+    return run_pipeline(
+        spark, corpus["pages"] if pages is None else pages, corpus["gazetteer"],
+        alias_edges=corpus["alias_edges"], sink_dir=sink, n_parts=8, **kw,
+    )
+
+
+def test_pipeline_counters_match_direct_counts(spark, corpus, sink):
+    from rdf_i2b2_converter_spark.operators.mentions import detect_mentions
+
+    _, m = _run(spark, corpus, sink)
+    assert m.n_pages == corpus["n"]
+    assert m.n_mentions == detect_mentions(
+        corpus["pages"], corpus["gazetteer"], html_col="html"
+    ).count() > 0
+
+
+def test_pipeline_partial_resume_ledger_counts_match_disk(spark, corpus, sink):
+    _run(spark, corpus, sink)
+    with open(os.path.join(sink, "_ledger.json"), "w") as fh:
+        json.dump({"completed_parts": [0, 1, 2, 3]}, fh)
+    _, m = _run(spark, corpus, sink)
+    on_disk = {
+        r["part_id"]: r["count"]
+        for r in spark.read.parquet(os.path.join(sink, "triples")).groupBy("part_id").count().collect()
+    }
+    ledger = json.load(open(os.path.join(sink, "_ledger.json")))
+    assert sorted(ledger["parts"]) == ["4", "5", "6", "7"]
+    assert {int(p): e["n_triples"] for p, e in ledger["parts"].items()} == {
+        p: on_disk.get(p, 0) for p in range(4, 8)
+    }
+    assert m.n_pages == corpus["n"] and m.n_mentions > 0
+
+
+def test_pipeline_counts_runs_that_write_no_triples(spark, corpus, tmp_path):
+    # no pages at all, and pages without text or html: the write runs but
+    # produces nothing, and the counters still come back (no blocking get)
+    _, m = _run(spark, corpus, str(tmp_path / "empty"), pages=corpus["pages"].limit(0))
+    assert (m.n_pages, m.n_mentions, m.n_triples) == (0, 0, 0)
+    blank = corpus["pages"].limit(5).withColumn("text", F.lit(None).cast("string")).withColumn(
+        "html", F.lit(None).cast("binary")
+    )
+    _, m = _run(spark, corpus, str(tmp_path / "blank"), pages=blank)
+    assert (m.n_pages, m.n_mentions, m.n_triples) == (5, 0, 0)
+
+
+def test_pipeline_job_budget(spark, corpus, sink, jobs_of):
+    closed = close_ontology(corpus["ontology"])
+    jobs, _ = jobs_of(lambda: _run(spark, corpus, sink, ontology_closed=closed))
+    assert len(jobs) <= PIPELINE_JOB_BUDGET, f"{len(jobs)} jobs"

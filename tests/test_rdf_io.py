@@ -683,6 +683,19 @@ def test_scan_turtle_errors_conflicting_prefix_redeclaration(spark, tmp_path):
     assert any("conflicting IRI" in r["error"] for r in errs)
 
 
+def test_scan_turtle_errors_prefixes_are_scoped_per_file(spark, tmp_path):
+    """Line mode scopes prefixes per file: the same label bound to
+    different IRIs in two files is no conflict, and the reader expands
+    each file with its own binding."""
+    from rdf_i2b2_converter_spark.sources.rdf import read_turtle, scan_turtle_errors
+
+    (tmp_path / "a.ttl").write_text("@prefix ex: <http://a.org/> .\nex:s ex:p ex:o .\n")
+    (tmp_path / "b.ttl").write_text("@prefix ex: <http://b.org/> .\nex:s ex:p ex:o .\n")
+    assert scan_turtle_errors(spark, str(tmp_path), multiline=False).collect() == []
+    subjects = {r["s"] for r in read_turtle(spark, str(tmp_path), multiline=False).collect()}
+    assert subjects == {"http://a.org/s", "http://b.org/s"}
+
+
 # --------------------------------------------------------------- RDF/XML
 
 
