@@ -7,8 +7,9 @@ plus awk post-production collapse into ONE Catalyst DAG here:
         --link--> --canonicalize--> --emit_triples-->
         partitioned sink (+ integrity check + metrics)
 
-Counters are ``pyspark.sql.Observation``s on the sink write's plan, not
-extra passes (see ``PipelineMetrics``).
+Counters come from the sink write's plan (``pyspark.sql.Observation``) and
+from one aggregate over the written sink, not from extra passes (see
+``PipelineMetrics``).
 
 Resumability: the reference's append-mode CSV cannot resume
 (src/data_loader.py:34-43); we write per-``part_id`` parquet partitions and
@@ -43,9 +44,10 @@ class PipelineMetrics:
     ``n_pages``/``n_mentions``: Observations in map stages of the sink
     write (they over-count only if a map stage re-runs after its shuffle
     output is lost); with every part resumed, a direct page count and 0.
-    Ledger per-part counts: an Observation in the write's result stage
-    (exact under task retries). ``n_triples`` counts the sink, resumed
-    parts included; the mismatch/violation counts are exact queries."""
+    ``n_triples`` and the ledger's per-part counts: one ``groupBy`` count
+    of the written sink, resumed parts included (an Observation with one
+    ``count_if`` per part costs rows x parts: more than this pass at 16
+    parts). The mismatch/violation counts are exact queries."""
 
     started_at: float = field(default_factory=time.time)
     n_pages: int = 0
@@ -171,41 +173,40 @@ def run_pipeline(
     done: set[int] = set(ledger["completed_parts"])
 
     todo = [p for p in range(n_parts) if p not in done]
+    path = os.path.join(sink_dir, "triples")
     if todo:
-        # per-part counts for the ledger (north_rule: per-partition
-        # lineage), observed in the write's result stage
-        parts_seen = Observation()
         (
             triples.filter(F.col("part_id").isin(todo))
             .repartition("part_id")
-            .observe(
-                parts_seen, *[F.count_if(F.col("part_id") == p).alias(str(p)) for p in todo]
-            )
             .write.mode("overwrite")
             .partitionBy("part_id")
             .option("partitionOverwriteMode", "dynamic")
-            .parquet(os.path.join(sink_dir, "triples"))
+            .parquet(path)
         )
         # Observation.get blocks until its plan has run
-        counts = parts_seen.get
         metrics.n_pages = _observed_count(pages_seen, pages)
         metrics.n_mentions = _observed_count(mentions_seen, mentions)
+    else:  # every part resumed: nothing ran, nothing was observed
+        metrics.n_pages = pages.count()
+
+    # ONE pass over the sink gives n_triples (resumed parts included) and
+    # the ledger's per-part counts (north_rule: per-partition lineage) of
+    # what is actually on disk. The triples schema: a run that wrote no rows
+    # left no file to infer it from.
+    out = spark.read.schema(triples.schema).parquet(path)
+    counts = {r["part_id"]: r["count"] for r in out.groupBy("part_id").count().collect()}
+    metrics.n_triples = sum(counts.values())
+    if todo:
         stamp = time.time()
         for p in todo:
             ledger["parts"][str(p)] = {
-                "n_triples": counts[str(p)],
+                "n_triples": counts.get(p, 0),
                 "written_at": round(stamp, 2),
                 "n_source_pages": metrics.n_pages,
             }
         done.update(todo)
         ledger["completed_parts"] = sorted(done)
         write_text_file(spark, ledger_path, json.dumps(ledger))
-    else:  # every part resumed: nothing ran, nothing was observed
-        metrics.n_pages = pages.count()
-
-    # the triples schema: a run that wrote no rows left no file to infer it from
-    out = spark.read.schema(triples.schema).parquet(os.path.join(sink_dir, "triples"))
-    metrics.n_triples = out.count()
     if "html" in pages.columns:
         metrics.n_extract_mismatches = verify_extraction(pages).count()
     if ontology_closed is not None:

@@ -124,9 +124,8 @@ def test_fused_plan_has_single_python_stage(spark):
 
 
 #: jobs of one fresh ``run_pipeline`` call with an ontology on the
-#: ``corpus`` fixture (measured; the sink read-back and the page count
-#: pass it replaced cost 23 before the counters came from the write)
-PIPELINE_JOB_BUDGET = 17
+#: ``corpus`` fixture, run alone (measured)
+PIPELINE_JOB_BUDGET = 16
 
 
 def _run(spark, corpus, sink, pages=None, **kw):

@@ -856,6 +856,32 @@ def test_read_rdf_autochunk_warns_on_giant_ttl(spark, tmp_path, monkeypatch):
         assert not any("Auto-chunking" in str(c.message) for c in caught)
 
 
+def test_document_size_warning_points_at_caller(spark, tmp_path, monkeypatch):
+    """The wholetext-size warnings of both document readers are attributed
+    to the line that called the reader, not to a line inside the library."""
+    import warnings as w
+
+    import rdf_i2b2_converter_spark.sources.rdf as rdfmod
+    from rdf_i2b2_converter_spark.sources.jsonld import read_jsonld
+
+    ttl = tmp_path / "big.ttl"
+    ttl.write_text("@prefix ex: <http://e/> .\n" + "ex:s ex:p ex:o .\n" * 20)
+    jsonld = tmp_path / "big.jsonld"
+    jsonld.write_text('[{"@id": "http://e/a", "http://e/p": "' + "x" * 500 + '"}]')
+    monkeypatch.setattr(rdfmod, "_TTL_DOC_WARN_BYTES", 100)
+    for read, path, marker in (
+        (rdfmod.read_rdf, ttl, "Auto-chunking"),
+        (read_jsonld, jsonld, "read_jsonld_lines"),
+    ):
+        with w.catch_warnings(record=True) as caught:
+            w.simplefilter("always")
+            read(spark, str(path))
+        hits = [c for c in caught if marker in str(c.message)]
+        assert len(hits) == 1 and hits[0].filename == __file__, [
+            (c.filename, c.lineno) for c in hits
+        ]
+
+
 def test_write_rdfxml_roundtrip(spark, tmp_path):
     """write_rdfxml -> read_rdfxml round-trips resources, typed/lang/plain
     literals and bnodes (labels via rdf:nodeID, remapped on re-read); each
